@@ -207,45 +207,38 @@ class CrawlLoop(
         frontierCount, pages,
         robots, robotsEmpty, seen, Some(store.bloomDir(k)), seedHosts, runners, ordBase)
 
-      // The fresh write is the round's ONE materializing pass (its lineage
-      // computes every per-round cache) and doubles as both the next
-      // frontier delta and the seen delta — no separate warm-up count, no
-      // separate seen_add write job.
-      timed(k, "write.fresh") { store.write("fresh", k + 1, out.fresh) }
-      // ...then the independent output jobs run CONCURRENTLY (they only
-      // read caches + small recomputes); the round barrier is the await
-      val outputs = Seq[(String, () => Unit)](
-        "write.order" -> (() => store.write("order", k, out.order)),
-        "write.results" -> (() => store.write("results", k, out.results)),
-        "write.carry" -> (() => store.write("carry", k + 1, out.carry)),
-        "bloom.update" -> (() => BloomShards.update(spark,
-          out.fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
-          Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg)))
-      // cache-hit counts decide the loop condition — the heavy per-shard
-      // stats aggregation stays OFF the round barrier entirely
-      val freshCountF = Future(out.fresh.count())
-      val carryCountF = Future(out.carry.count())
-      val statsF = Future(out.stats.collect())
-      val outputF = Future.traverse(outputs) { case (name, job) =>
-        Future(timed(k, name)(job()))
-      }
-      timed(k, "outputs.await") { Await.result(outputF, Duration.Inf) }
-      frontierCount = Await.result(freshCountF, Duration.Inf) +
-        Await.result(carryCountF, Duration.Inf)
+      // The output jobs read only the round's checkpoints and run CONCURRENTLY
+      // (fresh = next frontier delta AND seen delta). All settle before release:
+      // none reads a freed block, no straggler writes into a resumed store.
+      val statRows = try {
+        val outputs = Seq[(String, () => Unit)](
+          "write.fresh" -> (() => store.write("fresh", k + 1, out.fresh)),
+          "write.order" -> (() => store.write("order", k, out.order)),
+          "write.results" -> (() => store.write("results", k, out.results)),
+          "write.carry" -> (() => store.write("carry", k + 1, out.carry)),
+          "bloom.update" -> (() => BloomShards.update(spark,
+            out.fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
+            Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg)))
+        val statsF = Future(out.stats.collect())
+        val outputF = outputs.map { case (name, job) => Future(timed(k, name)(job())) }
+        timed(k, "outputs.await") { (statsF +: outputF).foreach(Await.ready(_, Duration.Inf)) }
+        outputF.foreach(_.value.get.get)
+        statsF.value.get.get
+      } finally out.release()
+      // next frontier = carry ∪ fresh = deferred ∪ retries ∪ fresh: exact, no count job
+      frontierCount = statRows.filter(r => Set("fresh", "budget_deferred", "retries")(r.getString(1)))
+        .map(_.getLong(2)).sum
       if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
         store.writeBucketed("seen_all", k + 1,
           readSeen(k).reduce(_ unionByName _)
             .unionByName(store.read("fresh", k + 1).select("url", "urlHash")),
           "urlHash", cfg.shards)
 
-      // Lineage is DURABLE: the per-shard stats aggregation (launched above,
-      // overlapping the output writes — it reads only the round's caches)
-      // is awaited and its rows written BEFORE commit(k+1), so a committed
-      // round always has its lineage on disk; a crash loses at most the
-      // round that was going to be re-run anyway. The rows live on the
-      // driver — one small FS write, no Spark job.
+      // Lineage is DURABLE: its rows are written BEFORE commit(k+1), so a
+      // committed round always has its lineage on disk; a crash loses at
+      // most the round that was going to be re-run anyway. The rows live on
+      // the driver — one small FS write, no Spark job.
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      val statRows = timed(k, "stats.await") { Await.result(statsF, Duration.Inf) }
       val lineage = statRows.groupBy(_.getInt(0)).map { case (shard, rows) =>
         val m = rows.map(r => r.getString(1) -> r.getLong(2)).toMap.withDefaultValue(0L)
         Lineage(k, shard, m("admitted"), m("fetched"), m("discovered"),
@@ -253,7 +246,6 @@ class CrawlLoop(
           m("errors"), m("retries"), wallMs)
       }.toSeq
       store.writeLineage(k, lineage)
-      out.persisted.foreach(_.unpersist())
 
       ordBase = CrawlRound.nextOrdBase(ordBase, math.max(1, cfg.shards))
       store.commit(k + 1, Map(

@@ -1,10 +1,26 @@
 package graft
 
-import graft.crawl.{CrawlLoop, SnapshotStore}
+import graft.crawl.{CrawlLoop, CrawlOutcome, SnapshotStore}
 import graft.fixtures.Fixtures
 import graft.fixtures.Fixtures.FixtureConfig
 import graft.model._
+import org.apache.spark.BlockProbe
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
+
+object ResumeSpec {
+  val Seed: String = Fixtures.urlOf(0, 0)
+
+  /** CrawlDemo's title runner on the seed page; throws on every other page,
+    * so round 0 commits and round 1 aborts in its results write
+    */
+  object SeedOnlyRunner extends PageRunner {
+    def apply(p: Page): Either[String, String] =
+      if (p.url == Seed) CrawlDemo.TitleRunner(p)
+      else throw new IllegalStateException(s"runner failure on ${p.url}")
+  }
+}
 
 /** Checkpoint-equivalence property (BASELINE.json:6): a crawl killed after
   * round k and resumed produces the EXACT same crawl order and seen set as
@@ -13,6 +29,27 @@ import org.scalatest.funsuite.AnyFunSuite
 class ResumeSpec extends AnyFunSuite {
   import SparkTestBase.{spark, tmpDir}
   import spark.implicits._
+  import ResumeSpec._
+
+  /** every committed `frontier` meta value equals the rows of carry ∪ fresh
+    * the next round reads — the count CrawlLoop derives from lineage rows
+    */
+  private def assertFrontierMeta(store: SnapshotStore): Unit =
+    (0 to store.latestCommitted.get).foreach { k =>
+      val rows = Seq("carry", "fresh").filter(store.exists(_, k)).map(store.read(_, k).count()).sum
+      assert(store.committedMeta(k).flatMap(_.get("frontier")) === Some(rows),
+        s"round $k: committed frontier meta differs from |carry ∪ fresh|")
+    }
+
+  /** nothing created after RDD `firstId` stays persisted, cached or stored */
+  private def assertReleased(firstId: Int): Unit = {
+    val sc = spark.sparkContext
+    assert(sc.getPersistentRDDs.keys.forall(_ <= firstId), "a crawl RDD is still persisted")
+    assert(BlockProbe.cacheIsEmpty(spark), "the crawl left a frame in the CacheManager")
+    eventually(timeout(Span(30, Seconds))) {
+      assert(BlockProbe.rddIdsWithBlocks(sc).forall(_ <= firstId), "a crawl RDD still holds blocks")
+    }
+  }
 
   test("kill after round k + resume ≡ uninterrupted run (order and seen set)") {
     val fix = FixtureConfig(nHosts = 4, maxPagesPerHost = 16)
@@ -42,6 +79,8 @@ class ResumeSpec extends AnyFunSuite {
     val resSeen = resumed.seen(spark).select("url").as[String].collect().toSet
     assert(resOrder === fullOrder, "resumed crawl order diverged")
     assert(resSeen === fullSeen, "resumed seen set diverged")
+    assertFrontierMeta(storeA)
+    assertFrontierMeta(storeB)
 
     // resuming a finished crawl is a no-op with identical outputs
     val again = new CrawlLoop(spark, cfgFull, pages, robots, Map.empty, storeB).run(seeds)
@@ -155,5 +194,65 @@ class ResumeSpec extends AnyFunSuite {
     assert(store.latestExisting("seen_all", resumed.lastRound + 1).nonEmpty,
       "aggressive compaction must have produced a seen_all snapshot")
     store.clear()
+  }
+
+  test("round checkpoints are released: no crawl RDD stays persisted, cached or stored") {
+    val fix = FixtureConfig(nHosts = 4, maxPagesPerHost = 16)
+    val pages = spark.createDataset(Fixtures.generate(fix)).toDF()
+    val robots = spark.emptyDataset[RobotsRule]
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val firstId = sc.emptyRDD[Int].id
+    val store = new SnapshotStore(tmpDir("release"), spark)
+    val (out, unpersisted) = BlockProbe.unpersistedDuring(sc) {
+      new CrawlLoop(spark, CrawlConfig(hostBudget = 3), pages, robots,
+        Map("title" -> CrawlDemo.TitleRunner), store).run(Seq(Seed))
+    }
+    val rounds = out.get.roundsRun
+    assert(rounds > 2)
+    // f, admitted, deferred, hits, retries, ranked, winnowed, fresh and the
+    // politeness frames: every round checkpoints them and frees them
+    assert(unpersisted.count(_ > firstId) >= 8 * rounds,
+      s"expected >= 8 released checkpoints per round, got ${unpersisted.count(_ > firstId)}")
+    assertReleased(firstId)
+    store.clear()
+  }
+
+  test("a round aborted by a throwing runner leaves no blocks; resume ≡ uninterrupted") {
+    val fix = FixtureConfig(nHosts = 4, maxPagesPerHost = 16)
+    val pages = spark.createDataset(Fixtures.generate(fix)).toDF()
+    val robots = spark.emptyDataset[RobotsRule]
+    val cfg = CrawlConfig(hostBudget = 3)
+    val good = Map[String, PageRunner]("title" -> CrawlDemo.TitleRunner)
+    def outputs(o: CrawlOutcome) = (
+      o.order(spark).select("url").as[String].collect().toVector,
+      o.seen(spark).select("url").as[String].collect().toSet,
+      o.results(spark).as[RunnerResult].collect().toSet)
+
+    val storeA = new SnapshotStore(tmpDir("abort-baseline"), spark)
+    val expected = outputs(new CrawlLoop(spark, cfg, pages, robots, good, storeA).run(Seq(Seed)))
+    assert(expected._3.exists(_.round > 0), "precondition: runners produce results past round 0")
+
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val firstId = sc.emptyRDD[Int].id
+    val storeB = new SnapshotStore(tmpDir("abort"), spark)
+    val (aborted, unpersisted) = BlockProbe.unpersistedDuring(sc) {
+      new CrawlLoop(spark, cfg, pages, robots, Map("title" -> SeedOnlyRunner), storeB).run(Seq(Seed))
+    }
+    val err = aborted.failed.get
+    assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("runner failure")), s"unexpected failure: $err")
+    assert(storeB.latestCommitted === Some(1), "round 0 commits, round 1 aborts before its commit")
+    assert(unpersisted.count(_ > firstId) >= 8 * 2, "both rounds' checkpoints are released")
+    assertReleased(firstId)
+
+    val resumed = new CrawlLoop(spark, cfg, pages, robots, good, storeB).run(Seq(Seed))
+    val got = outputs(resumed)
+    assert(got._1 === expected._1, "resumed crawl order diverged")
+    assert(got._2 === expected._2, "resumed seen set diverged")
+    assert(got._3 === expected._3, "resumed runner results diverged")
+    assertFrontierMeta(storeB)
+    storeA.clear(); storeB.clear()
   }
 }
