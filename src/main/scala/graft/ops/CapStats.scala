@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.util.CollectionAccumulator
 
-/** Lazy drop accounting for [[Dedup.capBuckets]] (VERDICT r3 Wrong #2).
+/** Lazy drop accounting for [[BandJoin.capBuckets]] (VERDICT r3 Wrong #2).
   *
   * The cap's loud-accounting contract used to run an EAGER aggregate job at
   * plan-construction time — "give me the DataFrame" had a side effect.

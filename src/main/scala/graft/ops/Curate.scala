@@ -39,7 +39,7 @@ object Curate {
       maxTokens: Int = 1 << 20,
       /** near-dup Jaccard threshold for the dedup stage */
       nearDupThreshold: Double = 0.7,
-      /** hot-bucket guard for the LSH stage ([[Dedup.capBuckets]]); <=0 off */
+      /** hot-bucket guard for the LSH stage ([[BandJoin.capBuckets]]); <=0 off */
       maxBucketSize: Int = 0)
 
   /** the one-pass annotation: lang, quality (+ features), ws token count */

@@ -81,52 +81,40 @@ object Dedup {
     }.getOrElse(numHashes)
   }
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** default cap accounting: loud, driver-side */
-  private[graft] def logCap(what: String)(droppedBuckets: Long, droppedRows: Long): Unit =
-    log.warn(s"[$what] dropped $droppedBuckets over-capacity LSH buckets " +
-      s"($droppedRows member rows) — pairs inside them are NOT generated. " +
-      "Compose exact-dedup first (Dedup.dedupCorpus) so byte-identical " +
-      "clusters never reach the band join.")
-
-  /** Optional hot-bucket guard for the LSH band join: buckets with more than
-    * `maxBucketSize` members are DROPPED — with loud accounting, never
-    * silently. The accounting is LAZY ([[CapStats]]): the hot-bucket frame
-    * records its rows into an accumulator as the plan executes, and the
-    * (buckets, rows) drop counts reach `onCap` on the listener bus right
-    * after the first action on the returned frame — building the plan
-    * fires no Spark job. A bucket of m members emits O(m²)
-    * candidate pairs; no partition-level skew handling changes that count,
-    * so past the point where exact-dedup composition (the real fix —
-    * [[dedupCorpus]]) has run, a cap is the only defense against
-    * near-identical boilerplate going quadratic. maxBucketSize <= 0
-    * disables the cap.
+  /** Band buckets (id, band, bandHash) of a shingle table (id, sh): the
+    * MinHash signature's LSH band hashes, one row per band.
     */
-  private[graft] def capBuckets(buckets: DataFrame, keyCols: Seq[String], maxBucketSize: Int,
-                                onCap: (Long, Long) => Unit): DataFrame =
-    if (maxBucketSize <= 0) buckets
-    else {
-      val keys = keyCols.map(col)
-      val hot = CapStats.observed(
-        buckets.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxBucketSize),
-        keyCols, onCap)
-      // no broadcast hint: the hot set is normally tiny (AQE broadcasts it),
-      // but a mis-tuned banding could make it huge — don't force it onto
-      // the driver in that case
-      buckets.join(hot.select(keys: _*), keyCols, "left_anti")
-    }
+  private def bandBuckets(shingled: DataFrame, numHashes: Int, seed: Long, bands: Int): DataFrame =
+    shingled.select(col("id"),
+      posexplode(lshBandHashes(minhashSignature(col("sh"), numHashes, seed), bands, numHashes / bands))
+        .as(Seq("band", "bandHash")))
 
-  /** Join candidate id-pairs back to a per-id payload table ONCE per side —
-    * the de-amplified LSH verification shape: the heavy payload (shingle set
-    * / vector) crosses the wire exactly twice in total, not once per band ×
-    * side. `pairs` needs columns (a, b); `payload` needs (id, <payloadCol>).
+  /** (a, b, jaccard) for attached shingle pairs (sha, shb) at or above `threshold` */
+  private def jaccardAtLeast(attached: DataFrame, threshold: Double): DataFrame =
+    attached
+      .withColumn("jaccard", jaccard(col("sha"), col("shb")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a"), col("b"), TextAnalysis.halfUp(col("jaccard"), 4).as("jaccard"))
+
+  /** The one path behind [[minhashNearDups]] and [[ngramJaccardNearDups]];
+    * they differ only in `shingles`, the seed and their defaults.
     */
-  private[graft] def attachPayloads(pairs: DataFrame, payload: DataFrame, payloadCol: String): DataFrame =
-    pairs
-      .join(payload.select(col("id").as("a"), col(payloadCol).as(s"${payloadCol}a")), Seq("a"))
-      .join(payload.select(col("id").as("b"), col(payloadCol).as(s"${payloadCol}b")), Seq("b"))
+  private def shinglePairs(docs: DataFrame, idCol: String, shingles: Column,
+                           numHashes: Int, threshold: Double, seed: Long, bandsOverride: Int,
+                           maxBucketSize: Int, onCap: (Long, Long) => Unit): DataFrame = {
+    val bands = if (bandsOverride > 0) bandsOverride else chooseBands(numHashes, threshold)
+    // the shingle table feeds candidate generation AND both verification
+    // joins — persist so the (expensive) shingling pass runs once, not 3x;
+    // ~8-16 bytes/shingle columnar, spills to disk if it outgrows memory
+    // registered with OpCaches (the returned frame is lazy, so this op
+    // cannot unpersist) — callers release via OpCaches.releaseAll()
+    val shingled = OpCaches.persist(
+      Inputs.parallelizeSmall(docs).select(col(idCol).as("id"), shingles.as("sh")),
+      StorageLevel.MEMORY_AND_DISK)
+    val pairs = BandJoin.pairs(bandBuckets(shingled, numHashes, seed, bands),
+      Seq("band", "bandHash"), maxBucketSize, onCap)
+    jaccardAtLeast(BandJoin.attach(pairs, Seq("sh"), shingled, shingled), threshold)
+  }
 
   /** End-to-end MinHash-LSH near-duplicate pairs: shingle → signature →
     * band-bucket equi-join on (band, bandHash) carrying ids ONLY → exact
@@ -145,37 +133,11 @@ object Dedup {
       seed: Long = 42L,
       /** 0 = derive from threshold via [[chooseBands]] */
       bandsOverride: Int = 0,
-      /** optional hot-bucket guard, see [[capBuckets]]; <= 0 = off */
+      /** optional hot-bucket guard, see [[BandJoin.capBuckets]]; <= 0 = off */
       maxBucketSize: Int = 0,
-      onCap: (Long, Long) => Unit = logCap("minhashNearDups")): DataFrame = {
-    val bands = if (bandsOverride > 0) bandsOverride else chooseBands(numHashes, threshold)
-    val rowsPerBand = numHashes / bands
-    // the shingle table feeds candidate generation AND both verification
-    // joins — persist so the (expensive) shingling pass runs once, not 3x;
-    // ~8-16 bytes/shingle columnar, spills to disk if it outgrows memory
-    // registered with OpCaches (the returned frame is lazy, so this op
-    // cannot unpersist) — callers release via OpCaches.releaseAll()
-    val shingled = OpCaches.persist(
-      Inputs.parallelizeSmall(docs)
-        .select(col(idCol).as("id"), wordShingles(col(textCol), k).as("sh")),
-      StorageLevel.MEMORY_AND_DISK)
-    val buckets = capBuckets(
-      shingled
-        .select(col("id"),
-          posexplode(lshBandHashes(minhashSignature(col("sh"), numHashes, seed), bands, rowsPerBand))
-            .as(Seq("band", "bandHash"))),
-      Seq("band", "bandHash"), maxBucketSize, onCap)
-    val l = buckets.select(col("band"), col("bandHash"), col("id").as("a"))
-    val r = buckets.select(col("band"), col("bandHash"), col("id").as("b"))
-    val pairs = l.join(r, Seq("band", "bandHash"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .dropDuplicates("a", "b")
-    attachPayloads(pairs, shingled, "sh")
-      .withColumn("jaccard", jaccard(col("sha"), col("shb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), TextAnalysis.halfUp(col("jaccard"), 4).as("jaccard"))
-  }
+      onCap: (Long, Long) => Unit = BandJoin.logCap("minhashNearDups")): DataFrame =
+    shinglePairs(docs, idCol, wordShingles(col(textCol), k), numHashes, threshold,
+      seed, bandsOverride, maxBucketSize, onCap)
 
   /** THE corpus-scale near-dedup entry point: exact-dedup-FIRST composition.
     *
@@ -202,7 +164,7 @@ object Dedup {
     * doc itself for kept docs.
     *
     * `maxBucketSize` remains available as a second line of defense for
-    * NEAR-identical (not byte-identical) boilerplate — see [[capBuckets]].
+    * NEAR-identical (not byte-identical) boilerplate — see [[BandJoin.capBuckets]].
     */
   def dedupCorpus(
       docs: DataFrame,
@@ -213,30 +175,24 @@ object Dedup {
       threshold: Double = 0.7,
       seed: Long = 42L,
       maxBucketSize: Int = 0): DataFrame = {
+    val (memberRep, pairs) = repNearDups(docs, textCol, idCol, k, numHashes, threshold, seed,
+      maxBucketSize, "dedupCorpus")
+    BandJoin.keepSmallest(memberRep, pairs, "doc_id")
+  }
+
+  /** The exact-first front half of [[dedupCorpus]] and [[clusterCorpus]]:
+    * (doc_id → representative of its sha-256 cluster, [[minhashNearDups]]
+    * pairs among the representatives only).
+    */
+  private def repNearDups(docs: DataFrame, textCol: String, idCol: String, k: Int,
+                          numHashes: Int, threshold: Double, seed: Long, maxBucketSize: Int,
+                          what: String): (DataFrame, DataFrame) = {
     val hashed = docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"),
       contentKey(textCol).as("__h"))
-    // consumed by BOTH the membership join and the representative semi-join
-    // — persist the (~72-byte/row) cluster table so the full-corpus hash
-    // aggregation runs once; released by callers via OpCaches.releaseAll()
-    val reps = OpCaches.persist(
-      hashed.groupBy(col("__h")).agg(min(col("doc_id")).as("rep")),
-      StorageLevel.MEMORY_AND_DISK)
-    val memberRep = hashed.select(col("doc_id"), col("__h"))
-      .join(reps, Seq("__h")).select(col("doc_id"), col("rep"))
-    val repDocs = hashed
-      .join(reps.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("__t").as(textCol))
-    val pairs = minhashNearDups(repDocs, textCol, "doc_id", k, numHashes, threshold,
-      seed, maxBucketSize = maxBucketSize, onCap = logCap("dedupCorpus"))
-    // keep-smallest: representative b is dropped in favor of its smallest
-    // near-duplicate a (< b by construction of the pair output)
-    val dropRep = pairs.groupBy(col("b").as("rep")).agg(min(col("a")).as("__near"))
-    memberRep.join(dropRep, Seq("rep"), "left")
-      .select(col("doc_id"),
-        when(col("doc_id") =!= col("rep"), col("rep"))
-          .when(col("__near").isNotNull, col("__near"))
-          .otherwise(col("doc_id")).as("dup_of"))
-      .withColumn("kept", col("dup_of") === col("doc_id"))
+    val (memberRep, reps) = BandJoin.exactReps(hashed, "doc_id", "__h")
+    val repDocs = reps.select(col("doc_id"), col("__t").as(textCol))
+    (memberRep, minhashNearDups(repDocs, textCol, "doc_id", k, numHashes, threshold,
+      seed, maxBucketSize = maxBucketSize, onCap = BandJoin.logCap(what)))
   }
 
   /** Transitive near-dup clustering: where [[dedupCorpus]] resolves each
@@ -273,18 +229,8 @@ object Dedup {
       seed: Long = 42L,
       iters: Int = 8,
       maxBucketSize: Int = 0): DataFrame = {
-    val hashed = docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"),
-      contentKey(textCol).as("__h"))
-    val reps = OpCaches.persist(
-      hashed.groupBy(col("__h")).agg(min(col("doc_id")).as("rep")),
-      StorageLevel.MEMORY_AND_DISK)
-    val memberRep = hashed.select(col("doc_id"), col("__h"))
-      .join(reps, Seq("__h")).select(col("doc_id"), col("rep"))
-    val repDocs = hashed
-      .join(reps.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("__t").as(textCol))
-    val pairs = minhashNearDups(repDocs, textCol, "doc_id", k, numHashes, threshold,
-      seed, maxBucketSize = maxBucketSize, onCap = logCap("clusterCorpus"))
+    val (memberRep, pairs) = repNearDups(docs, textCol, idCol, k, numHashes, threshold, seed,
+      maxBucketSize, "clusterCorpus")
     // propagate ONLY over reps that appear in a near-dup pair — the small
     // minority. A singleton rep's component is itself by definition, so
     // making every rep propagate its own label for `iters` rounds (the
@@ -373,13 +319,9 @@ object Dedup {
       numHashes: Int = 128,
       threshold: Double = 0.7,
       seed: Long = 42L): (DataFrame, DataFrame) = {
-    val bands = chooseBands(numHashes, threshold)
     val shingled = Inputs.parallelizeSmall(docs)
       .select(col(idCol).as("id"), wordShingles(col(textCol), k).as("sh"))
-    val buckets = shingled.select(col("id"),
-      posexplode(lshBandHashes(minhashSignature(col("sh"), numHashes, seed), bands, numHashes / bands))
-        .as(Seq("band", "bandHash")))
-    (shingled, buckets)
+    (shingled, bandBuckets(shingled, numHashes, seed, chooseBands(numHashes, threshold)))
   }
 
   /** INCREMENTAL near-dedup: new documents against an existing corpus,
@@ -405,25 +347,21 @@ object Dedup {
       threshold: Double = 0.7,
       seed: Long = 42L,
       maxBucketSize: Int = 0,
-      onCap: (Long, Long) => Unit = logCap("minhashDeltaNearDups")): DataFrame = {
+      onCap: (Long, Long) => Unit = BandJoin.logCap("minhashDeltaNearDups")): DataFrame = {
     val (newSh0, newBk) = minhashIndex(newDocs, textCol, idCol, k, numHashes, threshold, seed)
     val (baseSh0, baseBk) = minhashIndex(baseDocs, textCol, idCol, k, numHashes, threshold, seed)
     // each side's shingle pass feeds its bucket explode AND its
     // verification join — persist; released via OpCaches.releaseAll()
     val newSh = OpCaches.persist(newSh0, StorageLevel.MEMORY_AND_DISK)
     val baseSh = OpCaches.persist(baseSh0, StorageLevel.MEMORY_AND_DISK)
-    val cappedBase = capBuckets(baseBk, Seq("band", "bandHash"), maxBucketSize, onCap)
+    // two-sided (new × base), so no a < b: not BandJoin.pairs' self-join
+    val cappedBase = BandJoin.capBuckets(baseBk, Seq("band", "bandHash"), maxBucketSize, onCap)
     val pairs = newBk.select(col("band"), col("bandHash"), col("id").as("a"))
       .join(cappedBase.select(col("band"), col("bandHash"), col("id").as("b")),
         Seq("band", "bandHash"))
       .select(col("a"), col("b"))
       .dropDuplicates("a", "b")
-    pairs
-      .join(newSh.select(col("id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(baseSh.select(col("id").as("b"), col("sh").as("shb")), Seq("b"))
-      .withColumn("jaccard", jaccard(col("sha"), col("shb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), TextAnalysis.halfUp(col("jaccard"), 4).as("jaccard"))
+    jaccardAtLeast(BandJoin.attach(pairs, Seq("sh"), newSh, baseSh), threshold)
   }
 
   // ---------- simhash ----------
@@ -444,7 +382,7 @@ object Dedup {
     * bucket-join, verify exact hamming distance.
     *
     * `maxBucketSize`/`onCap` is the same loud hot-bucket guard every other
-    * LSH family routes through ([[capBuckets]]): a boilerplate-heavy corpus
+    * LSH family routes through ([[BandJoin.capBuckets]]): a boilerplate-heavy corpus
     * co-buckets its identical cluster in ALL 4 bands and the join goes
     * quadratic; dropped bands lose their pairs (recall, never precision) and
     * are accounted via `onCap`. <= 0 = off. Composing exact-dedup first
@@ -453,32 +391,25 @@ object Dedup {
   def simhashNearDups(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                       maxHamming: Int = 3,
                       maxBucketSize: Int = 0,
-                      onCap: (Long, Long) => Unit = logCap("simhashNearDups")): DataFrame = {
+                      onCap: (Long, Long) => Unit = BandJoin.logCap("simhashNearDups")): DataFrame = {
     val sigs = Inputs.parallelizeSmall(docs)
       .select(col(idCol).as("id"), simhash64(col(textCol)).as("sig"))
-    val banded = capBuckets(
-      sigs.select(col("id"), col("sig"),
+    val banded = sigs.select(col("id"), col("sig"),
         explode(array((0 until 4).map(b =>
           struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*)).as("bk"))
-        .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.key").as("key")),
-      Seq("band", "key"), maxBucketSize, onCap)
-    val l = banded.select(col("band"), col("key"), col("id").as("a"), col("sig").as("siga"))
-    val r = banded.select(col("band"), col("key"), col("id").as("b"), col("sig").as("sigb"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      // verify hamming BEFORE the pair distinct: the signature rides every
-      // candidate row already (unlike the minhash family, whose payload
-      // attaches post-distinct), so the bit_count filter is free here and
-      // the dropDuplicates shuffle then carries only the pairs that PASS —
-      // 16-bit band keys make random candidate collisions the overwhelming
-      // majority at corpus scale, and shuffling them into the distinct just
-      // to discard them after was the dominant cost of this op. Same output:
-      // hamming is a function of (a, b) (sigs are functionally dependent on
-      // ids), so filter-then-distinct == distinct-then-filter.
-      .withColumn("hamming", bit_count(col("siga").bitwiseXOR(col("sigb"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("a", "b")
-      .select(col("a"), col("b"), col("hamming"))
+      .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.key").as("key"))
+    // verify hamming BEFORE the pair distinct: the signature rides every
+    // candidate row already (unlike the minhash family, whose payload
+    // attaches post-distinct), so the bit_count filter is free here and
+    // the dropDuplicates shuffle then carries only the pairs that PASS —
+    // 16-bit band keys make random candidate collisions the overwhelming
+    // majority at corpus scale, and shuffling them into the distinct just
+    // to discard them after was the dominant cost of this op. Same output:
+    // hamming is a function of (a, b) (sigs are functionally dependent on
+    // ids), so filter-then-distinct == distinct-then-filter.
+    BandJoin.pairs(banded, Seq("band", "key"), maxBucketSize, onCap, carry = Seq("sig"),
+      verify = _.withColumn("hamming", bit_count(col("siga").bitwiseXOR(col("sigb"))))
+        .filter(col("hamming") <= maxHamming))
   }
 
   // ---------- n-gram jaccard ----------
@@ -500,27 +431,7 @@ object Dedup {
                            n: Int = 3, threshold: Double = 0.6,
                            numHashes: Int = 64, bandsOverride: Int = 0,
                            maxBucketSize: Int = 0,
-                           onCap: (Long, Long) => Unit = logCap("ngramJaccardNearDups")): DataFrame = {
-    val bands = if (bandsOverride > 0) bandsOverride else chooseBands(numHashes, threshold)
-    val grams = OpCaches.persist( // one shingling pass; released by callers via OpCaches
-      Inputs.parallelizeSmall(docs)
-        .select(col(idCol).as("id"), charNgrams(col(textCol), n).as("sh")),
-      StorageLevel.MEMORY_AND_DISK)
-    val buckets = capBuckets(
-      grams
-        .select(col("id"),
-          posexplode(lshBandHashes(minhashSignature(col("sh"), numHashes, seed = 7L), bands, numHashes / bands))
-            .as(Seq("band", "bandHash"))),
-      Seq("band", "bandHash"), maxBucketSize, onCap)
-    val l = buckets.select(col("band"), col("bandHash"), col("id").as("a"))
-    val r = buckets.select(col("band"), col("bandHash"), col("id").as("b"))
-    val pairs = l.join(r, Seq("band", "bandHash"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .dropDuplicates("a", "b")
-    attachPayloads(pairs, grams, "sh")
-      .withColumn("jaccard", jaccard(col("sha"), col("shb")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), TextAnalysis.halfUp(col("jaccard"), 4).as("jaccard"))
-  }
+                           onCap: (Long, Long) => Unit = BandJoin.logCap("ngramJaccardNearDups")): DataFrame =
+    shinglePairs(docs, idCol, charNgrams(col(textCol), n), numHashes, threshold, seed = 7L,
+      bandsOverride, maxBucketSize, onCap)
 }

@@ -4,11 +4,12 @@ import org.apache.spark.sql.DataFrame
 
 /** Registry for DataFrames persisted INSIDE lazily-returned operators.
   *
-  * [[Dedup.minhashNearDups]], [[Dedup.ngramJaccardNearDups]] and the
-  * [[Similarity]] LSH ops persist an expensive intermediate (shingle /
-  * bucket-key table) that both sides of their self-join read. Because each
-  * op returns a lazy DataFrame, the op itself cannot unpersist — the cache
-  * must outlive the call until the caller consumes the result. Without a
+  * The near-dup ops built on [[BandJoin]] persist an expensive
+  * intermediate — the shingle table, the exact-cluster representative
+  * table, the bucket-key table — that several branches of their plan
+  * read. Because each op returns a lazy DataFrame, the op itself cannot
+  * unpersist — the cache must outlive the call until the caller consumes
+  * the result. Without a
   * release hook, repeated calls in one session accumulate cached blocks
   * until block-manager eviction starts thrashing unrelated caches (e.g. the
   * crawl loop's per-round frames).

@@ -110,18 +110,6 @@ object Similarity {
         .select(col("id"), col("tb.t").as("t"), col("tb.bkt").as("bkt")),
       StorageLevel.MEMORY_AND_DISK)
 
-  /** join candidate id-pairs back to the vector table once per side (the
-    * de-amplified verification shape — vectors cross the wire twice total,
-    * not once per table × side). `vecs` carries the precomputed double
-    * vector `v` and its norm `n` ([[castWithNorm]]), so verification pays
-    * one dot product per pair, not three.
-    */
-  private def attachVectors(pairs: DataFrame, vecs: DataFrame,
-                            aCol: String, bCol: String): DataFrame =
-    pairs
-      .join(vecs.select(col("id").as(aCol), col("v").as("va"), col("n").as("__na")), Seq(aCol))
-      .join(vecs.select(col("id").as(bCol), col("v").as("vb"), col("n").as("__nb")), Seq(bCol))
-
   /** Embedding near-duplicate pairs above a cosine threshold, LSH-bucketed:
     * candidates come from an equi-join on hyperplane-signature buckets
     * (multi-table for recall — identical vectors always co-bucket, so
@@ -130,23 +118,17 @@ object Similarity {
     */
   def nearDupPairs(emb: DataFrame, dims: Int, threshold: Double, tables: Int = 2,
                    nPlanes: Int = 12, idCol: String = "vec_id", vecCol: String = "embedding",
-                   /** hot-bucket guard (Dedup.capBuckets): an m-member
+                   /** hot-bucket guard (BandJoin.capBuckets): an m-member
                      * bucket emits O(m²) pairs; embedding corpora with
                      * repeated vectors (boilerplate re-embeds) need either
                      * exact-dedup-first on the vector bytes or this cap.
                      * <= 0 = off. Drops are loudly accounted, never silent.
                      */
                    maxBucketSize: Int = 0): DataFrame = {
-    val vecs = castWithNorm(emb.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "n")
-    val buckets = Dedup.capBuckets(
-      bucketKeys(emb, dims, nPlanes, tables, idCol, vecCol),
-      Seq("t", "bkt"), maxBucketSize, Dedup.logCap("Similarity.nearDupPairs"))
-    val pairs = buckets.select(col("t"), col("bkt"), col("id").as("a"))
-      .join(buckets.select(col("t"), col("bkt"), col("id").as("b")), Seq("t", "bkt"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .dropDuplicates("a", "b")
-    attachVectors(pairs, vecs, "a", "b")
+    val vecs = castWithNorm(emb.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "__n")
+    val pairs = BandJoin.pairs(bucketKeys(emb, dims, nPlanes, tables, idCol, vecCol),
+      Seq("t", "bkt"), maxBucketSize, BandJoin.logCap("Similarity.nearDupPairs"))
+    BandJoin.attach(pairs, Seq("v", "__n"), vecs, vecs)
       .withColumn("sim", cosinePre(col("va"), col("vb"), col("__na"), col("__nb")))
       .filter(col("sim") >= threshold)
       .select(col("a"), col("b"), TextAnalysis.halfUp(col("sim"), 4).as("sim"))
@@ -167,25 +149,11 @@ object Similarity {
   def nearDupCorpus(emb: DataFrame, dims: Int, threshold: Double, tables: Int = 2,
                     nPlanes: Int = 12, idCol: String = "vec_id", vecCol: String = "embedding",
                     maxBucketSize: Int = 0): DataFrame = {
-    val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
-    // consumed twice (membership join + representative semi-join); persist
-    // so the full-corpus vector aggregation runs once (OpCaches-released)
-    val reps = OpCaches.persist(
-      base.groupBy(col("__v")).agg(min(col("vec_id")).as("rep")),
-      StorageLevel.MEMORY_AND_DISK)
-    val memberRep = base.join(reps, Seq("__v")).select(col("vec_id"), col("rep"))
-    val repVecs = base
-      .join(reps.select(col("rep").as("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("__v").as(vecCol))
-    val pairs = nearDupPairs(repVecs, dims, threshold, tables, nPlanes,
-      idCol = "vec_id", vecCol = vecCol, maxBucketSize = maxBucketSize)
-    val dropRep = pairs.groupBy(col("b").as("rep")).agg(min(col("a")).as("__near"))
-    memberRep.join(dropRep, Seq("rep"), "left")
-      .select(col("vec_id"),
-        when(col("vec_id") =!= col("rep"), col("rep"))
-          .when(col("__near").isNotNull, col("__near"))
-          .otherwise(col("vec_id")).as("dup_of"))
-      .withColumn("kept", col("dup_of") === col("vec_id"))
+    val (memberRep, reps) = BandJoin.exactReps(
+      emb.select(col(idCol).as("vec_id"), col(vecCol).as("__v")), "vec_id", "__v")
+    val pairs = nearDupPairs(reps.select(col("vec_id"), col("__v").as(vecCol)), dims, threshold,
+      tables, nPlanes, idCol = "vec_id", vecCol = vecCol, maxBucketSize = maxBucketSize)
+    BandJoin.keepSmallest(memberRep, pairs, "vec_id")
   }
 
   /** Distributed spherical k-means trainer for [[ivfTopK]] centroids
@@ -271,6 +239,67 @@ object Similarity {
     if (total == 0) 1.0 else hits.toDouble / total
   }
 
+  /** The IVF index half [[ivfTopK]] and [[ivfSearchTopK]] share: returns
+    * (probes, lists). `lists` (cid, nb, vb, __nb) is `corpus` under the
+    * fused map-side top-1 assignment ([[graft.functions.IvfAssign]] —
+    * r6-pinned bit-identical to the window formulation's rank-1 incl.
+    * NaN/tie order): the corpus's membership never needs a window exchange
+    * or a corpus-sized cache of double vectors — one map pass; ONE
+    * double-cast per row feeds both the assignment and the verification
+    * operands. Capped like every bucket join ([[BandJoin.capBuckets]]).
+    * `probes` (id, cid, va, __na) gives each `probeSrc` row its `nprobe`
+    * nearest centroids by cosine over a broadcast centroid table; it keeps
+    * the window formulation (top-nprobe per row has no fused form), cid
+    * cast long to match the lists. Centroid driver materialization is
+    * bounded at nlist×dims doubles (the [[trainCentroids]] budget).
+    */
+  private def ivfIndex(probeSrc: DataFrame, corpus: DataFrame, nlist: Int, nprobe: Int,
+                       idCol: String, vecCol: String, centroids: Option[DataFrame],
+                       maxListSize: Int, onCap: (Long, Long) => Unit): (DataFrame, DataFrame) = {
+    val cents0 = centroids.map(c => c.toDF("cid", "cv"))
+      .getOrElse(corpus.orderBy(col(idCol)).limit(nlist)
+        .select(col(idCol).as("cid"), col(vecCol).as("cv")))
+    val centRows = cents0
+      .select(col("cid").cast("long"), col("cv").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    val cvd = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
+    val lists = BandJoin.capBuckets(
+      cvd.select(
+        graft.functions.IvfAssign.ivf_assign(col("vd"), centRows).as("cid"),
+        col("id").as("nb"), col("vd").as("vb"), sqrt(dot(col("vd"), col("vd"))).as("__nb")),
+      Seq("cid"), maxListSize, onCap)
+    // both sides carry castWithNorm operands, so the n×nlist assignment
+    // stream pays one dot per (row, centroid)
+    val vecs = castWithNorm(probeSrc.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "n")
+    val cents = castWithNorm(
+      cents0.select(col("cid").cast("long").as("cid"), col("cv")), "cid", "cv", "cv", "cn")
+    val probes = vecs.crossJoin(broadcast(cents))
+      .withColumn("csim", cosinePre(col("v"), col("cv"), col("n"), col("cn")))
+      .withColumn("__cr", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("csim").desc, col("cid"))))
+      .filter(col("__cr") <= math.max(1, nprobe))
+      .select(col("id"), col("cid"), col("v").as("va"), col("n").as("__na"))
+    (probes, lists)
+  }
+
+  /** probed-lists join + per-list lossless prune + global top-k (the back
+    * half both IVF ops share); `excludeSelf` drops id==nb (self-kNN shape).
+    * Sides carry precomputed (va, __na) / (vb, __nb) cosine operands.
+    */
+  private def probeJoinTopK(probes: DataFrame, lists: DataFrame, k: Int,
+                            excludeSelf: Boolean): DataFrame = {
+    val perList = Window.partitionBy(col("id"), col("cid")).orderBy(col("sim").desc, col("nb"))
+    val w = Window.partitionBy(col("id")).orderBy(col("sim").desc, col("nb"))
+    val joined = probes.join(lists, Seq("cid"))
+    (if (excludeSelf) joined.filter(col("id") =!= col("nb")) else joined)
+      .withColumn("sim", cosinePre(col("va"), col("vb"), col("__na"), col("__nb")))
+      .withColumn("__lr", row_number().over(perList))
+      .filter(col("__lr") <= k)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("id"), col("rank"), col("nb"), TextAnalysis.halfUp(col("sim"), 6).as("sim"))
+  }
+
   /** IVF (inverted-file) approximate top-k — the second ANN scale path
     * (alongside the hyperplane-LSH [[annTopK]]): assign every vector to its
     * nearest of `nlist` centroids (the inverted lists), probe each query's
@@ -292,73 +321,17 @@ object Similarity {
     * smallest-id vectors: deterministic and SQL-oracle-reproducible, which
     * is what the correctness gate needs; recall then depends on the data.
     * `maxListSize` is the same loud last-resort cap as the LSH family's
-    * ([[Dedup.capBuckets]]): a degenerate centroid set can concentrate the
+    * ([[BandJoin.capBuckets]]): a degenerate centroid set can concentrate the
     * corpus into one list and go quadratic; dropped lists lose their
     * members' candidates (recall, never precision).
     */
-  /** broadcast-centroid assignment: each (id, v) row gets its `keepTop`
-    * nearest centroids ranked by cosine (the shared primitive of
-    * [[ivfTopK]] and [[ivfSearchTopK]]). Both inputs carry [[castWithNorm]]
-    * operands — (id, v, n) and (cid, cv, cn) — so the n×nlist assignment
-    * stream pays one dot per (row, centroid).
-    */
-  private def assignLists(vecs: DataFrame, cents: DataFrame, keepTop: Int): DataFrame =
-    vecs.crossJoin(broadcast(cents))
-      .withColumn("csim", cosinePre(col("v"), col("cv"), col("n"), col("cn")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("csim").desc, col("cid"))))
-      .filter(col("__cr") <= math.max(1, keepTop))
-      .select(col("id"), col("cid"), col("__cr"), col("v"), col("n"))
-
-  /** probed-lists join + per-list lossless prune + global top-k (the back
-    * half both IVF ops share); `excludeSelf` drops id==nb (self-kNN shape).
-    * Sides carry precomputed (va, __na) / (vb, __nb) cosine operands.
-    */
-  private def probeJoinTopK(probes: DataFrame, lists: DataFrame, k: Int,
-                            excludeSelf: Boolean): DataFrame = {
-    val perList = Window.partitionBy(col("id"), col("cid")).orderBy(col("sim").desc, col("nb"))
-    val w = Window.partitionBy(col("id")).orderBy(col("sim").desc, col("nb"))
-    val joined = probes.join(lists, Seq("cid"))
-    (if (excludeSelf) joined.filter(col("id") =!= col("nb")) else joined)
-      .withColumn("sim", cosinePre(col("va"), col("vb"), col("__na"), col("__nb")))
-      .withColumn("__lr", row_number().over(perList))
-      .filter(col("__lr") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("id"), col("rank"), col("nb"), TextAnalysis.halfUp(col("sim"), 6).as("sim"))
-  }
-
   def ivfTopK(emb: DataFrame, dims: Int, k: Int = 10, nlist: Int = 16, nprobe: Int = 2,
               idCol: String = "vec_id", vecCol: String = "embedding",
               centroids: Option[DataFrame] = None,
               maxListSize: Int = 0,
-              onCap: (Long, Long) => Unit = Dedup.logCap("Similarity.ivfTopK")): DataFrame = {
-    val cents0 = centroids.map(c => c.toDF("cid", "cv"))
-      .getOrElse(emb.orderBy(col(idCol)).limit(nlist)
-        .select(col(idCol).as("cid"), col(vecCol).as("cv")))
-    // lists side: the fused map-side argmax assignment ([[graft.functions.IvfAssign]]
-    // — the ivfSearchTopK shape, r6-pinned bit-identical to the window
-    // formulation's rank-1 incl. NaN/tie order). This replaces the r6
-    // persisted n×nprobe assignment cache: the corpus's top-1 membership
-    // never needs a window exchange or a corpus-sized cache of double
-    // vectors — one map pass, centroid driver materialization bounded at
-    // nlist×dims doubles (the trainCentroids budget).
-    val centRows = cents0
-      .select(col("cid").cast("long"), col("cv").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val cvd = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
-    val lists = Dedup.capBuckets(
-      cvd.select(
-        graft.functions.IvfAssign.ivf_assign(col("vd"), centRows).as("cid"),
-        col("id").as("nb"), col("vd").as("vb"), sqrt(dot(col("vd"), col("vd"))).as("__nb")),
-      Seq("cid"), maxListSize, onCap)
-    // probes side keeps the window formulation (top-nprobe per row has no
-    // fused form); cid cast long to match the map-side lists
-    val vecs = castWithNorm(emb.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "n")
-    val cents = castWithNorm(
-      cents0.select(col("cid").cast("long").as("cid"), col("cv")), "cid", "cv", "cv", "cn")
-    val probes = assignLists(vecs, cents, nprobe)
-      .select(col("id"), col("cid"), col("v").as("va"), col("n").as("__na"))
+              onCap: (Long, Long) => Unit = BandJoin.logCap("Similarity.ivfTopK")): DataFrame = {
+    val (probes, lists) = ivfIndex(emb, emb, nlist, nprobe, idCol, vecCol, centroids,
+      maxListSize, onCap)
     probeJoinTopK(probes, lists, k, excludeSelf = true)
   }
 
@@ -405,29 +378,10 @@ object Similarity {
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     centroids: Option[DataFrame] = None,
                     maxListSize: Int = 0,
-                    onCap: (Long, Long) => Unit = Dedup.logCap("Similarity.ivfSearchTopK")): DataFrame = {
-    val qv = castWithNorm(queries.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "n")
-    // corpus: ONE double-cast per row feeds both the fused assignment and
-    // the precomputed verification operands (vb, __nb) — still map-only
-    val cvd = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
-    val cents0 = centroids
-      .map(c => c.toDF("cid", "cv"))
-      .getOrElse(corpus.orderBy(col(idCol)).limit(nlist)
-        .select(col(idCol).as("cid"), col(vecCol).as("cv")))
-    val centRows = cents0
-      .select(col("cid").cast("long"), col("cv").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val lists = Dedup.capBuckets(
-      cvd.select(
-        graft.functions.IvfAssign.ivf_assign(col("vd"), centRows).as("cid"),
-        col("id").as("nb"), col("vd").as("vb"), sqrt(dot(col("vd"), col("vd"))).as("__nb")),
-      Seq("cid"), maxListSize, onCap)
-    // probes keep the window formulation (a query set is small; its Exchange
-    // carries |Q|·nprobe rows) — cid cast long to match the map-side lists
-    val cents = castWithNorm(
-      cents0.select(col("cid").cast("long").as("cid"), col("cv")), "cid", "cv", "cv", "cn")
-    val probes = assignLists(qv, cents, nprobe)
-      .select(col("id"), col("cid"), col("v").as("va"), col("n").as("__na"))
+                    onCap: (Long, Long) => Unit = BandJoin.logCap("Similarity.ivfSearchTopK")): DataFrame = {
+    // probes broadcast: a query set is small next to the corpus
+    val (probes, lists) = ivfIndex(queries, corpus, nlist, nprobe, idCol, vecCol, centroids,
+      maxListSize, onCap)
     probeJoinTopK(broadcast(probes), lists, k, excludeSelf = false)
   }
 
@@ -449,7 +403,7 @@ object Similarity {
     */
   def annTopK(emb: DataFrame, dims: Int, k: Int = 10, nPlanes: Int = 12, tables: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              /** hot-bucket guard for candidate GENERATION ([[Dedup.capBuckets]]):
+              /** hot-bucket guard for candidate GENERATION ([[BandJoin.capBuckets]]):
                 * the pre-prune below bounds what a hot bucket feeds the
                 * window, but an m-member bucket still emits (and cosines)
                 * O(m²) candidate pairs first. Corpora with massive
@@ -459,7 +413,7 @@ object Similarity {
                 * accounted, recall only. <= 0 = off.
                 */
               maxBucketSize: Int = 0,
-              onCap: (Long, Long) => Unit = Dedup.logCap("Similarity.annTopK"),
+              onCap: (Long, Long) => Unit = BandJoin.logCap("Similarity.annTopK"),
               /** multi-probe: 1 additionally probes every hamming-1
                 * neighbor bucket (one sign bit flipped) of each signature —
                 * the standard recall-at-fixed-tables trade (≈(nPlanes+1)×
@@ -470,8 +424,8 @@ object Similarity {
               probeBits: Int = 0): DataFrame = {
     require(probeBits >= 0 && probeBits <= 1,
       "probeBits > 1 multiplies candidates by C(nPlanes, b) — unsupported by design")
-    val vecs = castWithNorm(emb.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "n")
-    val buckets = Dedup.capBuckets(
+    val vecs = castWithNorm(emb.select(col(idCol).as("id"), col(vecCol)), "id", vecCol, "v", "__n")
+    val buckets = BandJoin.capBuckets(
       bucketKeys(emb, dims, nPlanes, tables, idCol, vecCol),
       Seq("t", "bkt"), maxBucketSize, onCap)
     // probe side: the row's own bucket plus (optionally) each one-bit-
@@ -491,7 +445,7 @@ object Similarity {
     val perBucket = Window.partitionBy(col("id"), col("__b"))
       .orderBy(col("sim").desc, col("nb"))
     val w = Window.partitionBy(col("id")).orderBy(col("sim").desc, col("nb"))
-    attachVectors(cands, vecs, "id", "nb")
+    BandJoin.attach(cands, Seq("v", "__n"), vecs, vecs, "id", "nb")
       .withColumn("sim", cosinePre(col("va"), col("vb"), col("__na"), col("__nb")))
       .withColumn("__brk", row_number().over(perBucket))
       .filter(col("__brk") <= k)

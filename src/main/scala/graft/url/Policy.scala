@@ -98,9 +98,9 @@ object UrlFunctions extends Serializable {
     * built-ins (split/filter/array_sort/array_join), no UDF: unlike
     * canonicalization this may also run corpus-side (normalizing a
     * url column before dedup), where a UDF round-trip would cost.
-    * array_sort compares UTF-8 bytes vs the pure function's UTF-16
-    * units — identical on the percent-encoded ASCII of canonical URLs
-    * (pinned by the parity sweep).
+    * array_sort compares UTF-8 bytes, which is the pure function's
+    * code-point order, so the two agree on any Unicode query (pinned by
+    * the parity sweep).
     */
   def stripTrackingCol(url: Column): Column = {
     import org.apache.spark.sql.functions._

@@ -168,12 +168,13 @@ object Urls extends Serializable {
   val TrackingParamPattern = "^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid|ref)(=.*)?$"
 
   /** Canonical-for-dedup query normalization: drop tracking params, sort
-    * the survivors bytewise, drop a now-empty `?`. Path/host/fragment
+    * the survivors by code point, drop a now-empty `?`. Path/host/fragment
     * untouched (run AFTER [[canonicalize]], which strips fragments).
     * Param sort makes `?a=1&b=2` and `?b=2&a=1` one seen-set entry — the
-    * SURT-style canonical ordering. Byte order assumes percent-encoded
-    * ASCII queries (what canonical URLs contain); the Column mirror
-    * compares UTF-8 bytes, this one UTF-16 units — identical on ASCII.
+    * SURT-style canonical ordering. Code-point order is UTF-8 byte order,
+    * which the Column mirror's `array_sort` uses, so both agree on any
+    * Unicode query; String's own UTF-16-unit order would not (a
+    * supplementary character sorts below U+E000..U+FFFF in UTF-16).
     * Opt-in in the crawl (`CrawlConfig.stripTracking`): the reference
     * semantics don't strip, so the flag defaults off.
     */
@@ -183,7 +184,7 @@ object Urls extends Serializable {
     else {
       val kept = url.substring(q + 1).split("&", -1).toSeq
         .filter(p => p.nonEmpty && !p.matches(TrackingParamPattern))
-        .sorted
+        .sortWith((x, y) => java.util.Arrays.compare(x.codePoints.toArray, y.codePoints.toArray) < 0)
       if (kept.isEmpty) url.substring(0, q)
       else url.substring(0, q) + "?" + kept.mkString("&")
     }

@@ -94,6 +94,36 @@ class DedupCorpusSpec extends AnyFunSuite {
     assert(Dedup.minhashNearDups(small).count() === (20L * 19 / 2),
       "uncapped identical cluster yields all C(m,2) pairs")
     graft.ops.OpCaches.releaseAll()
+
+    // the char-n-gram family routes through the same cap
+    val ngramBuckets = new java.util.concurrent.atomic.AtomicLong()
+    val ngramPairs = Dedup.ngramJaccardNearDups(docs, maxBucketSize = 64,
+      onCap = (b, _) => ngramBuckets.addAndGet(b))
+    assert(ngramBuckets.get() === 0L, "ngram accounting must be LAZY")
+    assert(ngramPairs.count() === 0L, "every ngram bucket holding the identical cluster was dropped")
+    awaitCap(ngramBuckets.get(), "ngramJaccardNearDups cap")
+    assert(Dedup.ngramJaccardNearDups(small).count() === (20L * 19 / 2),
+      "uncapped identical cluster yields all C(m,2) ngram pairs")
+    graft.ops.OpCaches.releaseAll()
+
+    // delta vs base: the cap guards the BASE side — a hot base cluster
+    // drops its buckets, so the delta boilerplate doc finds no partner
+    // while the delta copy of a cold base doc still pairs
+    val delta = Seq((100000L, boiler), (100001L, others.head)).toDF("doc_id", "text")
+    val deltaBuckets = new java.util.concurrent.atomic.AtomicLong()
+    val deltaRows = new java.util.concurrent.atomic.AtomicLong()
+    val deltaPairs = Dedup.minhashDeltaNearDups(delta, docs, maxBucketSize = 64,
+      onCap = (b, r) => { deltaBuckets.addAndGet(b); deltaRows.addAndGet(r) })
+    assert(deltaBuckets.get() === 0L, "delta accounting must be LAZY")
+    val deltaGot = deltaPairs.select("a", "b").as[(Long, Long)].collect().toSeq
+    awaitCap(deltaBuckets.get(), "minhashDeltaNearDups cap")
+    assert(awaitCap(deltaRows.get(), "minhashDeltaNearDups rows") >= n.toLong,
+      "dropped-row accounting covers the hot base cluster")
+    assert(deltaGot === Seq((100001L, n.toLong)),
+      "the delta boilerplate doc's only partners sat in dropped base buckets")
+    assert(Dedup.minhashDeltaNearDups(delta, small).count() === 20L,
+      "uncapped: the delta boilerplate doc pairs with every base copy")
+    graft.ops.OpCaches.releaseAll()
   }
 
   test("simhashNearDups: boilerplate cluster's bands drop loudly with the cap on") {

@@ -232,10 +232,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("minhash LSH near-dups plan as bucket equi-joins, not cross joins") {
-    val df = SparkEntry.queries("qd_dedup_minhash")(spark, dir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Cartesian") && !plan.contains("BroadcastNestedLoop"),
-      s"LSH candidate generation must be an equi-join:\n$plan")
+    Seq("qd_dedup_minhash", "qd_ngram_jaccard", "qd_dedup_simhash", "qd_dedup_delta",
+        "qd_embed_neardup").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Cartesian") && !plan.contains("BroadcastNestedLoop"),
+        s"$name: LSH candidate generation must be an equi-join:\n$plan")
+    }
+    graft.ops.OpCaches.releaseAll()
   }
 
   test("decontam: corpus probes the broadcast gram set in ONE pass, no corpus shuffle") {

@@ -98,7 +98,9 @@ class UrlsSpec extends AnyFunSuite {
       "http://h.test/p?refx=1" -> "http://h.test/p?refx=1", // prefix does NOT match
       "http://h.test/p?utm_=1&x=2" -> "http://h.test/p?x=2", // bare utm_ prefix
       "http://h.test/p?a=1&&b=2&" -> "http://h.test/p?a=1&b=2", // empty params drop
-      "http://h.test/p?" -> "http://h.test/p")
+      "http://h.test/p?" -> "http://h.test/p",
+      // code-point order: U+FF01 sorts below U+1F600 (UTF-16 units disagree)
+      "http://h.test/p?a=\uFF01&a=\uD83D\uDE00" -> "http://h.test/p?a=\uFF01&a=\uD83D\uDE00")
     planted.foreach { case (in, want) =>
       assert(Urls.stripTrackingParams(in) === want, s"pure diverged on $in")
     }
