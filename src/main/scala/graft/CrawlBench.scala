@@ -93,7 +93,7 @@ object CrawlBench {
     val profiler = if (sys.env.contains("GRAFT_PROFILE")) {
       val p = new StageProfiler; spark.sparkContext.addSparkListener(p); Some(p)
     } else None
-    // always-on shuffle-volume counters — the bucketed-store evidence
+    // always-on shuffle-volume counters
     val shufRead = new java.util.concurrent.atomic.AtomicLong()
     val shufWrite = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -108,29 +108,17 @@ object CrawlBench {
       linksPerPage = links, pctCrossDomain = 20, pctRedirect = 4, pctDangling = 4)
     // materialize the page store ONCE per shape; both parallelism levels read
     // the same input (driver instruction: same input, two core counts).
-    // Default = bucketed by urlHash (the at-scale shape: the fetch join
-    // never re-shuffles the store side); GRAFT_UNBUCKETED=1 reverts to a
-    // plain parquet store for the A/B shuffle-bytes comparison.
-    val bucketed = !sys.env.contains("GRAFT_UNBUCKETED")
+    // The store is bucketed by urlHash (the at-scale shape: the fetch join
+    // never re-shuffles the store side).
+    val tbl = s"graft_bench_pages_h${nHosts}_p${maxPages}_l$links"
+    val dir = s"/tmp/graft-bench/pages_bkt_h${nHosts}_p${maxPages}_l$links"
     val pages =
-      if (bucketed) {
-        val tbl = s"graft_bench_pages_h${nHosts}_p${maxPages}_l$links"
-        val dir = s"/tmp/graft-bench/pages_bkt_h${nHosts}_p${maxPages}_l$links"
-        if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          graft.crawl.PageStore.prepareBucketed(spark,
-            Fixtures.generateDS(spark, fix).toDF(), tbl, 64, dir, dedupCaptures = false)
-        else
-          graft.crawl.PageStore.reattach(spark, tbl, dir,
-            graft.crawl.PageStore.PageSchemaDdl, "urlHash", 64)
-      } else {
-        val pagesDir = s"/tmp/graft-bench/pages_h${nHosts}_p${maxPages}_l$links"
-        if (!new java.io.File(s"$pagesDir/_SUCCESS").exists()) {
-          Fixtures.generateDS(spark, fix).toDF()
-            .repartition(64, col("url"))
-            .write.mode("overwrite").parquet(pagesDir)
-        }
-        spark.read.parquet(pagesDir)
-      }
+      if (!new java.io.File(s"$dir/_SUCCESS").exists())
+        graft.crawl.PageStore.prepareBucketed(spark,
+          Fixtures.generateDS(spark, fix).toDF(), tbl, 64, dir, dedupCaptures = false)
+      else
+        graft.crawl.PageStore.reattach(spark, tbl, dir,
+          graft.crawl.PageStore.PageSchemaDdl, "urlHash", 64)
     val nPages = fix.totalPages
 
     val storeDir = java.nio.file.Files.createTempDirectory(s"crawl-bench-$cpus").toString
@@ -141,8 +129,6 @@ object CrawlBench {
       maxRounds = maxRounds,
       shards = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt,
       broadcastFrontierMaxRows = bcastRows,
-      // "bloom" (default) or "cuckoo" — the per-shard seen pre-filter A/B
-      seenFilterKind = sys.env.getOrElse("GRAFT_SEEN_KIND", "bloom"),
       // long-crawl stress knob: small values force frequent seen-set
       // compaction so a many-round run exercises the compaction chain
       compactSeenEvery = sys.env.getOrElse("GRAFT_COMPACT_EVERY", "16").toInt,
@@ -185,7 +171,7 @@ object CrawlBench {
     }
 
     println(s"""{"bench":"crawl","cpus":$cpus,"pages":$nPages,"rounds":${out.roundsRun},""" +
-      s""""bucketed":$bucketed,"fetched":$fetched,"discovered":$discovered,"deduped":$deduped,"errors":$errors,""" +
+      s""""fetched":$fetched,"discovered":$discovered,"deduped":$deduped,"errors":$errors,""" +
       s""""retries":$retries,"wall_sec":${f"$wall%.2f"},"throughput_urls_per_sec":${f"$thr%.1f"},""" +
       s""""steady_rounds":${steady.length},"steady_throughput_urls_per_sec":${f"$steadyThr%.1f"},""" +
       s""""shuffle_read_mb":${shufRead.get / 1048576},"shuffle_write_mb":${shufWrite.get / 1048576}}""")

@@ -119,17 +119,6 @@ class CrawlLoop(
     store.commit(0, Map("frontier" -> n, "ord_next" -> 0L))
   }
 
-  private val timing = sys.env.contains("GRAFT_TIMING")
-  private def timed[T](round: Int, phase: String)(body: => T): T = {
-    if (!timing) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[timing] r$round $phase ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   /** Seen set as of round k, as SNAPSHOT PARTS for chained anti-joins: the
     * latest compacted base (a bucketed table — its anti-join needs no
     * Exchange on this, the big, side) plus the uncompacted per-round deltas
@@ -211,17 +200,16 @@ class CrawlLoop(
       // (fresh = next frontier delta AND seen delta). All settle before release:
       // none reads a freed block, no straggler writes into a resumed store.
       val statRows = try {
-        val outputs = Seq[(String, () => Unit)](
-          "write.fresh" -> (() => store.write("fresh", k + 1, out.fresh)),
-          "write.order" -> (() => store.write("order", k, out.order)),
-          "write.results" -> (() => store.write("results", k, out.results)),
-          "write.carry" -> (() => store.write("carry", k + 1, out.carry)),
-          "bloom.update" -> (() => BloomShards.update(spark,
+        val statsF = Future(out.stats.collect())
+        val outputF = Seq(
+          Future(store.write("fresh", k + 1, out.fresh)),
+          Future(store.write("order", k, out.order)),
+          Future(store.write("results", k, out.results)),
+          Future(store.write("carry", k + 1, out.carry)),
+          Future(BloomShards.update(spark,
             out.fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
             Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg)))
-        val statsF = Future(out.stats.collect())
-        val outputF = outputs.map { case (name, job) => Future(timed(k, name)(job())) }
-        timed(k, "outputs.await") { (statsF +: outputF).foreach(Await.ready(_, Duration.Inf)) }
+        (statsF +: outputF).foreach(Await.ready(_, Duration.Inf))
         outputF.foreach(_.value.get.get)
         statsF.value.get.get
       } finally out.release()

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Partitioned bloom URL-seen pre-filter (BASELINE.json:14 "partitioned
-  * bloom/cuckoo URL-seen structure"; sizing heuristics per PAPERS.md bloom
-  *-collection work).
+  * bloom/cuckoo URL-seen structure" — Spark's `BloomFilter` is the one
+  * per-shard structure, at a fixed 1% target FPR; sizing heuristics per
+  * PAPERS.md bloom-collection work).
   *
   * Design for 10^10 URLs: the seen set cannot be one broadcastable filter
   * (~12 GB at 1% FPR), so it is sharded by `pmod(xxhash64(url), S)`. Each
@@ -27,43 +28,20 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object BloomShards extends Serializable {
 
-  /** Per-shard filter abstraction: bloom (default) or cuckoo
-    * (cfg.seenFilterKind = "cuckoo" — deletable, better FPR/bit at load;
-    * see [[CuckooFilter]]). Both honor the ZERO-false-negative contract the
-    * pre-filter shortcut depends on. Shard files are self-describing (one
-    * tag byte), so probes need no config.
+  /** Target false-positive rate of every shard filter. */
+  private final val Fpp = 0.01
+
+  /** Shard files are tag byte 0 followed by `BloomFilter.writeTo` (tag 1
+    * was the removed cuckoo option: such a file fails loudly instead of
+    * misparsing). Legacy shard files (pre-tag code wrote `bf.writeTo`
+    * directly — the bootstrap layout readShardMap still accepts) start with
+    * Spark BloomFilter's big-endian version int (1 in Spark <4, 2 in Spark
+    * 4's V2 format — verified against this classpath), so the first FOUR
+    * bytes disambiguate: (0,0,0,1)/(0,0,0,2) can only be an untagged
+    * stream — a tagged one reads (0,0,0,0) there (tag 0 + the version
+    * int's three leading zero bytes).
     */
-  private[filterset] sealed trait SeenFilter {
-    def putLong(h: Long): Unit
-    def mightContainLong(h: Long): Boolean
-    def writeTo(os: java.io.OutputStream): Unit
-  }
-  private final class BloomSeen(val bf: BloomFilter) extends SeenFilter {
-    def putLong(h: Long): Unit = bf.putLong(h)
-    def mightContainLong(h: Long): Boolean = bf.mightContainLong(h)
-    def writeTo(os: java.io.OutputStream): Unit = { os.write(0); bf.writeTo(os) }
-  }
-  private final class CuckooSeen(val cf: CuckooFilter) extends SeenFilter {
-    def putLong(h: Long): Unit = cf.put(h)
-    def mightContainLong(h: Long): Boolean = cf.mightContain(h)
-    def writeTo(os: java.io.OutputStream): Unit = { os.write(1); cf.writeTo(os) }
-  }
-  private def createFilter(kind: String, expected: Long, fpp: Double): SeenFilter =
-    kind match {
-      case "cuckoo" => new CuckooSeen(CuckooFilter.create(expected))
-      case _ => new BloomSeen(BloomFilter.create(expected, fpp))
-    }
-  /** Self-describing read with legacy detection. Tagged streams start with
-    * one tag byte (0 = bloom, 1 = cuckoo). Legacy shard files (pre-tag code
-    * wrote `bf.writeTo` directly — the bootstrap layout readShardMap still
-    * accepts) start with Spark BloomFilter's big-endian version int
-    * (1 in Spark <4, 2 in Spark 4's V2 format — verified against this
-    * classpath), so the first FOUR bytes disambiguate: (0,0,0,1)/(0,0,0,2)
-    * can only be an untagged bloom stream — a tagged bloom reads (0,0,0,0)
-    * there (tag 0 + the version int's three leading zero bytes) and a
-    * tagged cuckoo reads (1, nBuckets-high-bytes...), i.e. starts with 1.
-    */
-  private def readFilter(is0: java.io.InputStream): SeenFilter = {
+  private def readFilter(is0: java.io.InputStream): BloomFilter = {
     val is = new java.io.PushbackInputStream(is0, 4)
     val head = new Array[Byte](4)
     var n = 0
@@ -74,12 +52,14 @@ object BloomShards extends Serializable {
     }
     if (head(0) == 0 && head(1) == 0 && head(2) == 0 && (head(3) == 1 || head(3) == 2)) {
       is.unread(head) // legacy untagged Spark bloom stream
-      new BloomSeen(BloomFilter.readFrom(is))
+      BloomFilter.readFrom(is)
     } else {
       is.unread(head, 1, 3) // consume the tag byte, restore the rest
       head(0) match {
-        case 1 => new CuckooSeen(CuckooFilter.readFrom(is))
-        case 0 => new BloomSeen(BloomFilter.readFrom(is))
+        case 0 => BloomFilter.readFrom(is)
+        case 1 => throw new java.io.IOException(
+          "seen-filter tag byte 1 marks a shard of the removed cuckoo option " +
+            "(seenFilterKind = \"cuckoo\"); only bloom shards load — re-crawl into a fresh store")
         case t => throw new java.io.IOException(s"unknown seen-filter tag byte $t")
       }
     }
@@ -138,8 +118,6 @@ object BloomShards extends Serializable {
              newDir: String, cfg: CrawlConfig): Unit = {
     import spark.implicits._
     val expected = cfg.bloomExpectedPerShard
-    val fpp = cfg.bloomFpp
-    val kind = cfg.seenFilterKind
     val prevMap: Map[Int, String] = prevDir.map(readShardMap).getOrElse(Map.empty)
     val nd = newDir
     val touched = newHashes
@@ -148,7 +126,7 @@ object BloomShards extends Serializable {
       .groupByKey(_._1)
       .mapGroups { (shard, rows) =>
         val bf = prevMap.get(shard).flatMap(d => load(d, shard))
-          .getOrElse(createFilter(kind, expected, fpp))
+          .getOrElse(BloomFilter.create(expected, Fpp))
         var n = 0L
         rows.foreach { r => bf.putLong(r._2); n += 1 }
         val out = shardFile(nd, shard)
@@ -156,7 +134,7 @@ object BloomShards extends Serializable {
         f.mkdirs(out.getParent)
         val tmp = new Path(out.toString + ".tmp")
         val os = f.create(tmp, true)
-        try bf.writeTo(os) finally os.close()
+        try { os.write(0); bf.writeTo(os) } finally os.close()
         f.delete(out, false)
         f.rename(tmp, out)
         (shard, n)
@@ -173,12 +151,12 @@ object BloomShards extends Serializable {
   // make every in-flight task re-read its shard file).
   private val MaxCached = 256
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Int), SeenFilter](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(String, Int), SeenFilter]): Boolean =
+    new java.util.LinkedHashMap[(String, Int), BloomFilter](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(String, Int), BloomFilter]): Boolean =
         size() > MaxCached
     })
 
-  private def load(dir: String, shard: Int): Option[SeenFilter] = {
+  private def load(dir: String, shard: Int): Option[BloomFilter] = {
     val p = shardFile(dir, shard)
     val f = fs(p)
     if (!f.exists(p)) None
@@ -191,7 +169,7 @@ object BloomShards extends Serializable {
   // probe-side shard-map cache (tiny: a Map[Int,String] per round dir)
   private val mapCache = new java.util.concurrent.ConcurrentHashMap[String, Map[Int, String]]()
 
-  private def cached(dir: String, shard: Int): Option[SeenFilter] = {
+  private def cached(dir: String, shard: Int): Option[BloomFilter] = {
     val k = (dir, shard)
     Option(cache.get(k)).orElse {
       val m = mapCache.computeIfAbsent(dir, readShardMap(_))

@@ -138,16 +138,14 @@ final case class CrawlConfig(
     roundWallMs: Long = 0L,
     /** number of URL-seen bloom shards (and frontier hash shards) */
     shards: Int = 32,
-    /** expected insertions per bloom shard (sizing) */
-    bloomExpectedPerShard: Long = 1L << 20,
-    bloomFpp: Double = 0.01,
-    /** use the sharded bloom pre-filter in front of the exact anti-join */
-    bloomPrefilter: Boolean = true,
-    /** per-shard seen pre-filter structure: "bloom" (default) or "cuckoo"
-      * (deletable, better FPR per bit at load — BASELINE.json:14 allows
-      * either); both are zero-false-negative
+    /** expected insertions per bloom shard (sizing; the target FPR is
+      * fixed at 1% in [[graft.filterset.BloomShards]])
       */
-    seenFilterKind: String = "bloom",
+    bloomExpectedPerShard: Long = 1L << 20,
+    /** use the sharded bloom pre-filter in front of the exact anti-join
+      * (bloom is the only per-shard seen structure)
+      */
+    bloomPrefilter: Boolean = true,
     /** broadcast the frontier side of the fetch join when smaller than this */
     broadcastFrontierMaxRows: Long = 2_000_000L,
     /** salt factor for hosts whose admitted rows exceed one task's comfort */

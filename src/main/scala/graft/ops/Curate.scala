@@ -78,20 +78,12 @@ object Curate {
                  partitions: Int = 0): DataFrame = {
     require(tokensPerShard > 0, "tokensPerShard must be positive")
     val spark = docs.sparkSession
-    // partitions=0 derives from the optimizer's input-size estimate (clamped
-    // to [1, shuffle.partitions] — the Graph.adaptiveParts rule): the range
-    // repartition is exempt from AQE coalescing, so a constant here makes a
-    // small corpus pay nParts near-empty range partitions (sampling job,
-    // per-partition totals, write tasks downstream) for nothing. The OUTPUT
-    // is partition-count-independent by construction (global id order).
-    val conf = spark.sessionState.conf
-    val nParts = if (partitions > 0) partitions
-      else {
-        val advisory = math.max(1L, conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-        ((docs.queryExecution.optimizedPlan.stats.sizeInBytes + advisory - 1) / advisory)
-          .min(BigInt(conf.numShufflePartitions)).max(BigInt(1)).toInt
-      }
+    // partitions=0 derives from the input-size estimate (Inputs.adaptiveParts):
+    // a constant here makes a small corpus pay nParts near-empty range
+    // partitions (sampling job, per-partition totals, write tasks downstream)
+    // for nothing. The OUTPUT is partition-count-independent by construction
+    // (global id order).
+    val nParts = if (partitions > 0) partitions else Inputs.adaptiveParts(docs)
     val toks = Inputs.parallelizeSmall(docs).select(col(idCol).as("doc_id"),
       TextAnalysis.wsTokenCount(col(textCol)).cast("long").as("n_tokens"))
     val ranged = OpCaches.persist(

@@ -16,29 +16,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
-  /** Scale-adaptive partition count for the persisted edge/node tables the
-    * iterative ops pre-partition ONCE and then join against every round.
-    * An explicit `repartition(n, col)` is exempt from AQE coalescing, and
-    * every per-round label/rank exchange must MATCH it — so a constant
-    * (the session shuffle-partition count, sized for the corpus-scale ops)
-    * makes a small graph pay `iters × nParts` near-empty tasks of pure
-    * scheduler latency (measured: qg_frontier_rank 2.56 s → 1.05 s and
-    * qg_components 2.77 s → 1.99 s at sf0.1 just by matching partitions to
-    * data). Derive from the optimizer's size estimate instead (guide §2:
-    * partitioning derived from input size, not a constant tuned for one
-    * deployment): ceil(bytes / advisoryPartitionSize), clamped to
-    * [1, spark.sql.shuffle.partitions] — a 10^10-edge graph lands on the
-    * session ceiling exactly as before, a fixture graph gets 1.
-    */
-  private def adaptiveParts(df: DataFrame): Int = {
-    val conf = df.sparkSession.sessionState.conf
-    val advisory = math.max(1L,
-      conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    ((bytes + advisory - 1) / advisory)
-      .min(BigInt(conf.numShufflePartitions)).max(BigInt(1)).toInt
-  }
-
   /** Fixed-point (integer) PageRank.
     *
     * All arithmetic is on scaled BIGINTs — ranks start at `scale`
@@ -75,7 +52,7 @@ object Graph {
       damp: Long = 85L,
       checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 0 && damp >= 0 && damp <= 100 && scale > 0)
-    val nParts = adaptiveParts(edges)
+    val nParts = Inputs.adaptiveParts(edges)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // one row per edge + its source's outdegree, partitioned on src so the
@@ -136,7 +113,7 @@ object Graph {
       dstCol: String = "dst",
       maxIters: Int = 200,
       checkpointEvery: Int = 8): DataFrame = {
-    val nParts = adaptiveParts(edges)
+    val nParts = Inputs.adaptiveParts(edges)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // symmetrized edges PLUS the identity edge of every node: with
     // node→node present, "min of own label and neighbors' labels" is just

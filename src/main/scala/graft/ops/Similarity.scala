@@ -251,7 +251,8 @@ object Similarity {
     * nearest centroids by cosine over a broadcast centroid table; it keeps
     * the window formulation (top-nprobe per row has no fused form), cid
     * cast long to match the lists. Centroid driver materialization is
-    * bounded at nlist×dims doubles (the [[trainCentroids]] budget).
+    * bounded at nlist×dims doubles (the [[trainCentroids]] budget): a
+    * caller-supplied table with more than `nlist` rows fails loudly.
     */
   private def ivfIndex(probeSrc: DataFrame, corpus: DataFrame, nlist: Int, nprobe: Int,
                        idCol: String, vecCol: String, centroids: Option[DataFrame],
@@ -261,7 +262,10 @@ object Similarity {
         .select(col(idCol).as("cid"), col(vecCol).as("cv")))
     val centRows = cents0
       .select(col("cid").cast("long"), col("cv").cast("array<double>"))
+      .limit(nlist + 1)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    require(centRows.length <= nlist,
+      s"centroid table has more than nlist = $nlist rows; pass at most nlist centroids")
     val cvd = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vd"))
     val lists = BandJoin.capBuckets(
       cvd.select(

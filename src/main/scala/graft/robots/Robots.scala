@@ -89,10 +89,13 @@ object Robots {
     * enforces this at loop construction.
     */
   def requireUniqueHosts(robots: Dataset[RobotsRule]): Unit = {
+    // the collect only names hosts in the error: at most 20 (+1 to know
+    // there are more), however many are duplicated
     val dups = robots.groupBy(col("host")).count().filter(col("count") > 1)
-      .select("host").collect().map(_.getString(0))
+      .select("host").limit(21).collect().map(_.getString(0))
     require(dups.isEmpty,
-      s"robots table has duplicate rules for host(s): ${dups.mkString(", ")} — " +
+      s"robots table has duplicate rules for host(s): ${dups.take(20).mkString(", ")}" +
+        s"${if (dups.length > 20) ", …" else ""} — " +
         "collapse to one rule per host (reference semantics: last rule wins)")
   }
 

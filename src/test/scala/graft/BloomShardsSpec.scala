@@ -78,4 +78,39 @@ class BloomShardsSpec extends AnyFunSuite {
         BloomShards.shardCol(col("urlHash"), cfg.shards), col("urlHash"))).count()
     assert(missedAfter === 0L, "resume from a legacy store must preserve its hashes")
   }
+
+  test("format pin: a shard file is tag byte 0 followed by BloomFilter.writeTo of the same inserts") {
+    val cfg = CrawlConfig(shards = 1, bloomExpectedPerShard = 1024)
+    val dir = tmpDir("bloom-format")
+    val hashes = (0L until 100L).map(_ * 7919L)
+    BloomShards.update(spark,
+      hashes.toDF("urlHash").select(lit(0).as("shard"), col("urlHash")), None, dir, cfg)
+    val written = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/shard_0.bf"))
+
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(cfg.bloomExpectedPerShard, 0.01)
+    hashes.foreach(bf.putLong)
+    val expected = new java.io.ByteArrayOutputStream()
+    expected.write(0)
+    bf.writeTo(expected)
+    assert(written.toSeq === expected.toByteArray.toSeq,
+      "shard files must stay readable by stores checkpointed with the tagged bloom format")
+  }
+
+  test("a shard file tagged 1 (the removed cuckoo option) fails loudly on probe and on resume") {
+    val cfg = CrawlConfig(shards = 1, bloomExpectedPerShard = 1024)
+    val dir = tmpDir("bloom-tag1")
+    // tag 1, then bytes a cuckoo shard could have carried
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/shard_0.bf"),
+      Array[Byte](1, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0))
+    def assertRejected(e: Throwable): Unit = {
+      val causes = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[java.io.IOException] &&
+        c.getMessage.contains("removed cuckoo option")), e.toString)
+    }
+    val hashes = Seq(1L, 2L, 3L).toDF("urlHash").select(lit(0).as("shard"), col("urlHash"))
+    assertRejected(intercept[Exception](
+      hashes.filter(BloomShards.mightBeSeen(dir)(col("shard"), col("urlHash"))).count()))
+    assertRejected(intercept[Exception](
+      BloomShards.update(spark, hashes, Some(dir), tmpDir("bloom-tag1-next"), cfg)))
+  }
 }

@@ -313,11 +313,6 @@ class CrawlParitySpec extends AnyFunSuite {
     runBoth("nobloom", fix, CrawlConfig(bloomPrefilter = false), Seq(Fixtures.urlOf(0, 0)))
   }
 
-  test("cuckoo seen pre-filter ≡ bloom (exactness, BASELINE bloom/cuckoo option)") {
-    runBoth("cuckoo", fix, CrawlConfig(seenFilterKind = "cuckoo", hostBudget = 4),
-      Seq(Fixtures.urlOf(0, 0)))
-  }
-
   test("maxDepth caps discovery") {
     runBoth("maxdepth", fix, CrawlConfig(maxDepth = 2), Seq(Fixtures.urlOf(0, 0)))
   }

@@ -231,6 +231,13 @@ class DedupCorpusSpec extends AnyFunSuite {
       assert((id < 6) === (nb < 6), s"$id must only see its own cluster at nprobe=1")
     graft.ops.OpCaches.releaseAll()
 
+    // a caller-supplied centroid table is collected to the driver: more
+    // than nlist rows fails loudly instead of materializing unboundedly
+    val tooMany = (0 until 3).map(i => (i.toLong, protoA.map(_ + i))).toDF("cid", "cv")
+    val over = intercept[IllegalArgumentException](
+      Similarity.ivfTopK(emb, dims, k = 3, nlist = 2, nprobe = 1, centroids = Some(tooMany)))
+    assert(over.getMessage.contains("nlist = 2"), over.getMessage)
+
     // degenerate centroids: everything lands in one list -> the cap drops
     // it loudly and those candidates vanish (recall-only, never silent)
     val n = 3000

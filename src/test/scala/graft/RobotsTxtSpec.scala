@@ -244,4 +244,22 @@ class RobotsTxtSpec extends AnyFunSuite {
     assert(!graft.ref.ReferenceCrawl.robotsAllows(ruleMap, "http://h0.test/p/10", "h0.test"))
     assert(graft.ref.ReferenceCrawl.robotsAllows(ruleMap, "http://h0.test/p/125", "h0.test"))
   }
+
+  test("a robots table with two rules for one host fails the crawl, naming the host") {
+    import spark.implicits._
+    val fix = graft.fixtures.Fixtures.FixtureConfig(nHosts = 2, maxPagesPerHost = 4)
+    val pages = spark.createDataset(graft.fixtures.Fixtures.generate(fix)).toDF()
+    val host = graft.fixtures.Fixtures.hostName(0)
+    val robots = Seq(
+      RobotsRule(host, Seq("/a"), Seq.empty, 0L),
+      RobotsRule(host, Seq("/b"), Seq.empty, 0L),
+      RobotsRule("other.test", Seq("/"), Seq.empty, 0L)).toDS()
+    val store = new graft.crawl.SnapshotStore(SparkTestBase.tmpDir("robots-dup"), spark)
+    val loop = new graft.crawl.CrawlLoop(spark, graft.model.CrawlConfig(), pages, robots,
+      Map.empty, store)
+    val e = intercept[IllegalArgumentException](loop.run(Seq(graft.fixtures.Fixtures.urlOf(0, 0))))
+    assert(e.getMessage.contains(s"duplicate rules for host(s): $host —"), e.getMessage)
+    assert(!e.getMessage.contains("other.test"), e.getMessage)
+    assert(store.latestCommitted.isEmpty, "the guard runs before round 0 is written")
+  }
 }
