@@ -66,7 +66,7 @@ final case class CrawlOutcome(store: SnapshotStore, roundsRun: Int, lastRound: I
   */
 class CrawlLoop(
     spark: SparkSession,
-    cfg: CrawlConfig,
+    cfg0: CrawlConfig,
     pages0: DataFrame,
     robots: Dataset[RobotsRule],
     runners: Map[String, PageRunner],
@@ -74,6 +74,15 @@ class CrawlLoop(
 
   import spark.implicits._
   private val fc = CrawlRound.FrontierCols.map(col)
+  /** `cfg0` with the store's shard count, which is fixed when the store is
+    * created: bloom shard files and shard maps are keyed by
+    * `pmod(urlHash, shards)`, so a resume probing them under another count
+    * would answer "definitely unseen" for seen URLs. Every manifest carries
+    * the count; stores committed before it was recorded resume with `cfg0`'s.
+    */
+  private lazy val cfg: CrawlConfig =
+    store.latestCommitted.flatMap(store.committedMeta).flatMap(_.get("shards"))
+      .fold(cfg0)(s => cfg0.copy(shards = s.toInt))
   /** fetch joins key on urlHash; computing it here (if absent) keeps raw
     * stores working — but only a store PREPARED with the hash materialized
     * and bucketed gets the shuffle-free scan
@@ -116,7 +125,7 @@ class CrawlLoop(
         .select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
       None, store.bloomDir(0), cfg)
     val n = store.read("fresh", 0).count()
-    store.commit(0, Map("frontier" -> n, "ord_next" -> 0L))
+    store.commit(0, Map("frontier" -> n, "ord_next" -> 0L, "shards" -> cfg.shards.toLong))
   }
 
   /** Seen set as of round k, as SNAPSHOT PARTS for chained anti-joins: the
@@ -239,7 +248,8 @@ class CrawlLoop(
       store.commit(k + 1, Map(
         "frontier" -> frontierCount,
         "ord_next" -> ordBase,
-        "wall_ms" -> wallMs))
+        "wall_ms" -> wallMs,
+        "shards" -> cfg.shards.toLong))
       k += 1
       rounds += 1
       // trap boundary AFTER commit: driver-only state, recomputed on

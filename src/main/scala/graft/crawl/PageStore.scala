@@ -49,17 +49,25 @@ object PageStore {
       path: String,
       dedupCaptures: Boolean = true): DataFrame = {
     val base = withUrlHash(if (dedupCaptures) latestCapture(pages) else pages)
-    spark.sql(s"DROP TABLE IF EXISTS ${quoteIdent(tableName)}")
     // one writer task per bucket -> ONE file per bucket: Spark only trusts
     // (and elides the per-join Sort from) the sortBy metadata when each
     // bucket is a single file; multiple files per bucket would re-sort the
     // whole store side on every fetch join
-    base.repartition(buckets, col("urlHash"))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(buckets, "urlHash").sortBy("urlHash")
+    saveBucketed(spark, base.repartition(buckets, col("urlHash")), tableName, path, "urlHash", buckets)
+    spark.table(tableName)
+  }
+
+  /** Write `df` as an external parquet table at `path`, bucketed and sorted
+    * by `bucketCol`, replacing any catalog entry named `tableName` (the
+    * writer of both the page store and [[SnapshotStore.writeBucketed]]).
+    */
+  private[crawl] def saveBucketed(spark: SparkSession, df: DataFrame, tableName: String,
+                                  path: String, bucketCol: String, buckets: Int): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS ${quoteIdent(tableName)}")
+    df.write.mode(SaveMode.Overwrite).format("parquet")
+      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
       .option("path", path)
       .saveAsTable(tableName)
-    spark.table(tableName)
   }
 
   private def quoteIdent(name: String): String = s"`$name`"

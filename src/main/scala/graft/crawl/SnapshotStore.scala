@@ -1,8 +1,7 @@
 package graft.crawl
 
 import graft.model.Lineage
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Iceberg-semantics table store without Iceberg (SURVEY.md §7.5 — no
@@ -17,13 +16,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * The crawl loop codes against this class's five-method surface only, so a
   * real Iceberg catalog binds outside the sandbox via configuration, not
-  * code changes. All IO goes through the Hadoop FileSystem API (local FS
-  * here; HDFS/S3/… on a cluster unchanged).
+  * code changes. The store's small durable files go through [[StoreFiles]].
   */
 class SnapshotStore(val root: String, spark: SparkSession) {
-
-  private val conf = new Configuration()
-  private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 
   def tablePath(table: String, round: Int): String = s"$root/$table/round=$round"
   private def manifest(round: Int) = new Path(s"$root/_commits/round_$round.json")
@@ -32,8 +27,10 @@ class SnapshotStore(val root: String, spark: SparkSession) {
   def write(table: String, round: Int, df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(tablePath(table, round))
 
-  private def tableIdent(table: String, round: Int): String =
-    s"graft_${table}_r${round}_${(root.hashCode & 0x7FFFFFFF).toHexString}"
+  /** every catalog name of this store's bucketed tables ends in this */
+  private val catalogSuffix = s"_${(root.hashCode & 0x7FFFFFFF).toHexString}"
+  private def tableIdent(table: String, round: Int): String = s"graft_${table}_r$round$catalogSuffix"
+  private def bucketsFile(table: String, round: Int) = new Path(s"${tablePath(table, round)}/_graft_buckets")
 
   /** Write one per-round snapshot as a BUCKETED external parquet table
     * (bucketBy+sortBy on `bucketCol`) so downstream per-round joins against
@@ -42,34 +39,18 @@ class SnapshotStore(val root: String, spark: SparkSession) {
     */
   def writeBucketed(table: String, round: Int, df: DataFrame,
                     bucketCol: String, buckets: Int): Unit = {
-    val ident = tableIdent(table, round)
-    spark.sql(s"DROP TABLE IF EXISTS `$ident`")
-    df.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .option("path", tablePath(table, round))
-      .saveAsTable(ident)
+    PageStore.saveBucketed(spark, df, tableIdent(table, round), tablePath(table, round), bucketCol, buckets)
     // the snapshot's bucket count is PART of the snapshot, not of whoever
     // resumes it: a job resumed with a changed `shards` config would
     // otherwise mis-declare the bucketing on the exchange-free anti-join
     // path and silently join wrong. Written after the data (crash between
     // the two = un-committed round, re-run overwrites both).
-    val meta = new Path(s"${tablePath(table, round)}/_graft_buckets")
-    val f = fs(meta)
-    val os = f.create(meta, true)
-    try os.write(buckets.toString.getBytes("UTF-8")) finally os.close()
+    StoreFiles.writeText(bucketsFile(table, round), buckets.toString)
   }
 
   /** bucket count recorded by [[writeBucketed]] (None: pre-metadata store) */
-  def bucketCountOf(table: String, round: Int): Option[Int] = {
-    val meta = new Path(s"${tablePath(table, round)}/_graft_buckets")
-    val f = fs(meta)
-    if (!f.exists(meta)) None
-    else {
-      val is = f.open(meta)
-      val body = try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
-      body.trim.toIntOption
-    }
-  }
+  def bucketCountOf(table: String, round: Int): Option[Int] =
+    StoreFiles.readText(bucketsFile(table, round)).flatMap(_.trim.toIntOption)
 
   /** Read a snapshot written by [[writeBucketed]], re-registering the
     * bucketed table in a fresh session (resume: the in-memory catalog dies
@@ -81,36 +62,19 @@ class SnapshotStore(val root: String, spark: SparkSession) {
     PageStore.reattach(spark, tableIdent(table, round), tablePath(table, round),
       schemaDdl, bucketCol, buckets)
 
-  /** atomic commit marker: temp file + rename (atomic on one FS) */
-  def commit(round: Int, meta: Map[String, Long]): Unit = {
-    val m = manifest(round)
-    val f = fs(m)
-    f.mkdirs(m.getParent)
-    val tmp = new Path(m.toString + ".tmp")
-    val os = f.create(tmp, true)
-    try {
-      val body = meta.map { case (k, v) => s""""$k":$v""" }.mkString(s"""{"round":$round,""", ",", "}")
-      os.write(body.getBytes("UTF-8"))
-    } finally os.close()
-    f.delete(m, false)
-    f.rename(tmp, m)
-  }
+  /** atomic commit marker (a round is visible iff its manifest exists) */
+  def commit(round: Int, meta: Map[String, Long]): Unit =
+    StoreFiles.writeText(manifest(round),
+      meta.map { case (k, v) => s""""$k":$v""" }.mkString(s"""{"round":$round,""", ",", "}"))
 
-  def committedMeta(round: Int): Option[Map[String, Long]] = {
-    val m = manifest(round)
-    val f = fs(m)
-    if (!f.exists(m)) None
-    else {
-      val is = f.open(m)
-      val body = try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
-      val kv = """"([A-Za-z_]+)":(-?\d+)""".r
-      Some(kv.findAllMatchIn(body).map(mm => mm.group(1) -> mm.group(2).toLong).toMap)
+  def committedMeta(round: Int): Option[Map[String, Long]] =
+    StoreFiles.readText(manifest(round)).map { body =>
+      """"([A-Za-z_]+)":(-?\d+)""".r.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toLong).toMap
     }
-  }
 
   def latestCommitted: Option[Int] = {
     val dir = new Path(s"$root/_commits")
-    val f = fs(dir)
+    val f = StoreFiles.fs(dir)
     if (!f.exists(dir)) None
     else {
       val rounds = f.listStatus(dir).map(_.getPath.getName)
@@ -127,55 +91,34 @@ class SnapshotStore(val root: String, spark: SparkSession) {
     * seen-set additions; Iceberg analog: snapshot-as-of read)
     */
   def readUpTo(table: String, round: Int): DataFrame = {
-    val paths = (0 to round).map(tablePath(table, _)).filter(p => fs(new Path(p)).exists(new Path(p)))
+    val paths = (0 to round).filter(exists(table, _)).map(tablePath(table, _))
     require(paths.nonEmpty, s"no committed data for $table up to round $round")
     spark.read.parquet(paths: _*)
   }
 
   /** largest round <= upTo for which `table` has a data dir */
   def latestExisting(table: String, upTo: Int): Option[Int] =
-    (upTo to 0 by -1).find { r =>
-      val p = new Path(tablePath(table, r)); fs(p).exists(p)
-    }
+    (upTo to 0 by -1).find(exists(table, _))
 
-  def exists(table: String, round: Int): Boolean = {
-    val p = new Path(tablePath(table, round)); fs(p).exists(p)
-  }
+  def exists(table: String, round: Int): Boolean = StoreFiles.exists(new Path(tablePath(table, round)))
 
   // ---- lineage: a few dozen driver-held rows per round. Written as one
   // CSV file via the FileSystem API — NO Spark job (a per-round write job
   // was pure fixed overhead at 2-8 cores); read back (rare) the same way.
   private def lineagePath(round: Int) = new Path(s"$root/lineage_csv/round_$round.csv")
 
-  def writeLineage(round: Int, rows: Seq[Lineage]): Unit = {
-    val p = lineagePath(round)
-    val f = fs(p)
-    f.mkdirs(p.getParent)
-    val tmp = new Path(p.toString + ".tmp")
-    val os = f.create(tmp, true)
-    try {
-      val body = rows.map(l => Seq(l.round, l.shard, l.admitted, l.fetched, l.discovered,
+  def writeLineage(round: Int, rows: Seq[Lineage]): Unit =
+    StoreFiles.writeText(lineagePath(round),
+      rows.map(l => Seq(l.round, l.shard, l.admitted, l.fetched, l.discovered,
         l.dedupDropped, l.robotsDropped, l.budgetDeferred, l.errors, l.retries, l.wallMs)
-        .mkString(",")).mkString("\n")
-      os.write(body.getBytes("UTF-8"))
-    } finally os.close()
-    f.delete(p, false)
-    f.rename(tmp, p)
-  }
+        .mkString(",")).mkString("\n"))
 
   def readLineage(upTo: Int): Seq[Lineage] =
     (0 to upTo).flatMap { r =>
-      val p = lineagePath(r)
-      val f = fs(p)
-      if (!f.exists(p)) Seq.empty
-      else {
-        val is = f.open(p)
-        val body = try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
-        body.linesIterator.filter(_.nonEmpty).map { line =>
-          val c = line.split(",").map(_.toLong)
-          Lineage(c(0).toInt, c(1).toInt, c(2), c(3), c(4), c(5), c(6), c(7), c(8), c(9), c(10))
-        }.toSeq
-      }
+      StoreFiles.readText(lineagePath(r)).toSeq.flatMap(_.linesIterator.filter(_.nonEmpty).map { line =>
+        val c = line.split(",").map(_.toLong)
+        Lineage(c(0).toInt, c(1).toInt, c(2), c(3), c(4), c(5), c(6), c(7), c(8), c(9), c(10))
+      })
     }
 
   /** Seen set as of round k, as SNAPSHOT PARTS for chained anti-joins (and
@@ -208,15 +151,12 @@ class SnapshotStore(val root: String, spark: SparkSession) {
 
   def clear(): Unit = {
     val p = new Path(root)
-    val f = fs(p)
-    if (f.exists(p)) f.delete(p, true)
+    StoreFiles.fs(p).delete(p, true)
     // drop this store's catalog entries so a reused session can't resolve
     // bucketed tables whose files are gone
-    val prefix = s"graft_"
-    val suffix = s"_${(root.hashCode & 0x7FFFFFFF).toHexString}"
     spark.catalog.listTables().collect()
       .map(_.name)
-      .filter(n => n.startsWith(prefix) && n.endsWith(suffix))
+      .filter(n => n.startsWith("graft_") && n.endsWith(catalogSuffix))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
   }
 }

@@ -1,8 +1,8 @@
 package graft.filterset
 
+import graft.crawl.StoreFiles
 import graft.model.CrawlConfig
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -15,10 +15,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * Design for 10^10 URLs: the seen set cannot be one broadcastable filter
   * (~12 GB at 1% FPR), so it is sharded by `pmod(xxhash64(url), S)`. Each
   * round, one task per shard folds that shard's newly-seen urlHashes into
-  * the previous round's shard file (Hadoop FileSystem API — local FS in the
-  * sandbox, HDFS/S3 on a cluster, same code). Probing tasks lazily load and
-  * JVM-cache only the shards they touch — nothing is collected to the
-  * driver and no filter bytes travel row-wise through a join.
+  * the previous round's shard file (written through
+  * [[graft.crawl.StoreFiles]], like every small durable file of the store).
+  * Probing tasks lazily load and JVM-cache only the shards they touch —
+  * nothing is collected to the driver and no filter bytes travel row-wise
+  * through a join.
   *
   * Exactness: the bloom answers only "definitely unseen" — those rows skip
   * the exact anti-join; "maybe seen" rows still go through it, so the seen
@@ -69,8 +70,6 @@ object BloomShards extends Serializable {
 
   private def shardFile(dir: String, shard: Int) = new Path(s"$dir/shard_$shard.bf")
 
-  private def fs(p: Path): FileSystem = p.getFileSystem(new Configuration())
-
   // ---- shard map: per round dir, a tiny manifest mapping shard -> the dir
   // that holds its LATEST filter file. Untouched shards are carried forward
   // by REFERENCE, never by copying the MB-sized filter files (the old
@@ -78,36 +77,20 @@ object BloomShards extends Serializable {
   // fixed per-round overhead).
   private def mapFile(dir: String) = new Path(s"$dir/_shards.json")
 
-  private def readShardMap(dir: String): Map[Int, String] = {
-    val p = mapFile(dir)
-    val f = fs(p)
-    if (!f.exists(p)) {
-      // bootstrap layout: whatever shard files exist directly in dir
-      val d = new Path(dir)
-      if (!f.exists(d)) Map.empty
-      else f.listStatus(d).map(_.getPath.getName)
-        .collect { case n if n.startsWith("shard_") && n.endsWith(".bf") =>
-          n.stripPrefix("shard_").stripSuffix(".bf").toInt -> dir }
-        .toMap
-    } else {
-      val is = f.open(p)
-      val body = try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
-      """"(\d+)":"([^"]*)"""".r.findAllMatchIn(body)
-        .map(m => m.group(1).toInt -> m.group(2)).toMap
+  private def readShardMap(dir: String): Map[Int, String] =
+    StoreFiles.readText(mapFile(dir)) match {
+      case Some(body) =>
+        """"(\d+)":"([^"]*)"""".r.findAllMatchIn(body)
+          .map(m => m.group(1).toInt -> m.group(2)).toMap
+      case None =>
+        // bootstrap layout: whatever shard files exist directly in dir
+        val d = new Path(dir)
+        if (!StoreFiles.exists(d)) Map.empty
+        else StoreFiles.fs(d).listStatus(d).map(_.getPath.getName)
+          .collect { case n if n.startsWith("shard_") && n.endsWith(".bf") =>
+            n.stripPrefix("shard_").stripSuffix(".bf").toInt -> dir }
+          .toMap
     }
-  }
-
-  private def writeShardMap(dir: String, m: Map[Int, String]): Unit = {
-    val p = mapFile(dir)
-    val f = fs(p)
-    f.mkdirs(p.getParent)
-    val tmp = new Path(p.toString + ".tmp")
-    val os = f.create(tmp, true)
-    try os.write(m.map { case (s, d) => s""""$s":"$d"""" }.mkString("{", ",", "}").getBytes("UTF-8"))
-    finally os.close()
-    f.delete(p, false)
-    f.rename(tmp, p)
-  }
 
   /** Fold `newHashes` (columns: shard int, urlHash long) into the previous
     * round's shard filters: merged filters for TOUCHED shards are written
@@ -129,20 +112,14 @@ object BloomShards extends Serializable {
           .getOrElse(BloomFilter.create(expected, Fpp))
         var n = 0L
         rows.foreach { r => bf.putLong(r._2); n += 1 }
-        val out = shardFile(nd, shard)
-        val f = fs(out)
-        f.mkdirs(out.getParent)
-        val tmp = new Path(out.toString + ".tmp")
-        val os = f.create(tmp, true)
-        try { os.write(0); bf.writeTo(os) } finally os.close()
-        f.delete(out, false)
-        f.rename(tmp, out)
+        StoreFiles.writeAtomic(shardFile(nd, shard)) { os => os.write(0); bf.writeTo(os) }
         (shard, n)
       }
       .collect()
       .map(_._1)
       .toSet
-    writeShardMap(newDir, prevMap ++ touched.map(_ -> newDir))
+    StoreFiles.writeText(mapFile(newDir),
+      (prevMap ++ touched.map(_ -> newDir)).map { case (s, d) => s""""$s":"$d"""" }.mkString("{", ",", "}"))
   }
 
   // JVM-wide probe-side cache: (dir, shard) -> filter. Round dirs are unique
@@ -156,15 +133,8 @@ object BloomShards extends Serializable {
         size() > MaxCached
     })
 
-  private def load(dir: String, shard: Int): Option[BloomFilter] = {
-    val p = shardFile(dir, shard)
-    val f = fs(p)
-    if (!f.exists(p)) None
-    else {
-      val is = f.open(p)
-      try Some(readFilter(is)) finally is.close()
-    }
-  }
+  private def load(dir: String, shard: Int): Option[BloomFilter] =
+    StoreFiles.read(shardFile(dir, shard))(readFilter)
 
   // probe-side shard-map cache (tiny: a Map[Int,String] per round dir)
   private val mapCache = new java.util.concurrent.ConcurrentHashMap[String, Map[Int, String]]()

@@ -136,7 +136,10 @@ final case class CrawlConfig(
       * budget only (crawl-delay rules not enforced).
       */
     roundWallMs: Long = 0L,
-    /** number of URL-seen bloom shards (and frontier hash shards) */
+    /** number of URL-seen bloom shards (and frontier hash shards). Fixed
+      * when the store is created: a resume keeps the count recorded in the
+      * store's commit manifests, so this value applies only to a new store.
+      */
     shards: Int = 32,
     /** expected insertions per bloom shard (sizing; the target FPR is
       * fixed at 1% in [[graft.filterset.BloomShards]])

@@ -59,7 +59,9 @@ object Similarity {
     * norms precompute per row ([[castWithNorm]]) and the stream side
     * round-robins across the session's shuffle partitions first — a small
     * eval set arrives as ONE scan partition (one file ≪ maxPartitionBytes)
-    * and would otherwise run the whole n² loop on a single core.
+    * and would otherwise run the whole n² loop on a single core. The corpus
+    * side is broadcast only while it fits the broadcast threshold; above it
+    * the cross join stays a plain (partitioned) cartesian product.
     */
   def bruteForceTopK(emb: DataFrame, k: Int = 10,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -68,7 +70,7 @@ object Similarity {
       .repartition(nParts)
     val r = castWithNorm(emb.select(col(idCol).as("nb"), col(vecCol)), "nb", vecCol, "vb", "__nb")
     val w = Window.partitionBy(col("id")).orderBy(col("sim").desc, col("nb"))
-    l.crossJoin(broadcast(r))
+    l.crossJoin(if (Inputs.isBroadcastSmall(r)) broadcast(r) else r)
       .filter(col("id") =!= col("nb"))
       .withColumn("sim", cosinePre(col("va"), col("vb"), col("__na"), col("__nb")))
       .withColumn("rank", row_number().over(w))

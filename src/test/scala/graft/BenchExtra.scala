@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Separate main by design — `graft.Bench` is the frozen driver contract
   * and is not touched. Cited numbers land in OPTIMIZATION_r07.md.
   *
-  * Usage: runMain graft.BenchExtra <query> [<query> ...]
+  * Usage: Test/runMain graft.BenchExtra <query> [<query> ...]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, GRAFT_BENCH_REPS, GRAFT_BENCH_WARMUP
   */
 object BenchExtra {

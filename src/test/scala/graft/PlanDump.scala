@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * for every touched query, before and after). NOT part of the measurement
   * harness — Bench.scala is frozen; this main only writes plan text files.
   *
-  * Usage: runMain graft.PlanDump <outDir> <query> [<query> ...]
+  * Usage: Test/runMain graft.PlanDump <outDir> <query> [<query> ...]
   * Runs each declared query once (so AQE's final plan is shown), then
   * writes `<outDir>/<query>.txt` with the formatted explain output.
   */

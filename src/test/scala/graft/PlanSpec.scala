@@ -37,6 +37,23 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
   }
 
+  test("brute-force kNN broadcasts its corpus side only under the broadcast threshold") {
+    import spark.implicits._
+    val emb = (0 until 40).map(i => (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 7) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    val small = Similarity.bruteForceTopK(emb, k = 3)
+    val expected = small.collect().toSet
+    assert(planOf(small).contains("BroadcastExchange"), s"a small corpus side is broadcast:\n${planOf(small)}")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val big = Similarity.bruteForceTopK(emb, k = 3)
+      assert(big.collect().toSet === expected, "the unbroadcast cross join must give the same top-k")
+      val plan = planOf(big)
+      assert(!plan.contains("Broadcast"), s"over the threshold the corpus must not be broadcast:\n$plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("dedup anti-join plans as a join, never a cartesian") {
     val df = SparkEntry.queries("q09_dedup_anti")(spark, dir)
     df.collect()

@@ -124,9 +124,8 @@ class ResumeSpec extends AnyFunSuite {
     // bucketed snapshot from disk. The resumer also declares a DIFFERENT
     // cfg.shards: the bucket count persisted in the snapshot metadata (not
     // the caller's config) must drive the exchange-free seen anti-join.
-    // bloomPrefilter off: bloom shard files are genuinely tied to the shard
-    // count they were written with — a changed-shards resume is only
-    // defined for the exact path (the pre-filter is an optimization).
+    // bloomPrefilter off: this case covers the exact path alone; the next
+    // case repeats it with the pre-filter on.
     val fix = FixtureConfig(nHosts = 4, maxPagesPerHost = 16)
     val pagesV = Fixtures.generate(fix)
     val pages = spark.createDataset(pagesV).toDF()
@@ -165,6 +164,54 @@ class ResumeSpec extends AnyFunSuite {
       "cold-catalog resume diverged on crawl order")
     assert(resumed.seen(spark2).select("url").as(org.apache.spark.sql.Encoders.STRING).collect().toSet === fullSeen,
       "cold-catalog resume diverged on the seen set")
+    store2.clear()
+  }
+
+  test("cold-catalog resume with the bloom pre-filter on and a changed shards config") {
+    // The same scenario with bloomPrefilter = true: bloom shard files and
+    // the shard map are keyed by pmod(urlHash, shards). A resumer probing
+    // them with its own (different) count finds no file for most shards and
+    // answers "definitely unseen" for seen URLs, which then skip the exact
+    // anti-join. The store's recorded shard count must drive the resume.
+    val fix = FixtureConfig(nHosts = 4, maxPagesPerHost = 16)
+    val pagesV = Fixtures.generate(fix)
+    val pages = spark.createDataset(pagesV).toDF()
+    val robots = spark.emptyDataset[RobotsRule]
+    val seeds = Seq(Fixtures.urlOf(0, 0))
+    val cfg = CrawlConfig(hostBudget = 3, compactSeenEvery = 1, shards = 4)
+
+    val full = new CrawlLoop(spark, cfg, pages, robots, Map.empty,
+      new SnapshotStore(tmpDir("cold-bloom-baseline"), spark)).run(seeds)
+    val fullOrder = full.order(spark).select("url").as[String].collect().toVector
+    val fullSeen = full.seen(spark).select("url").as[String].collect().toSet
+
+    val root = tmpDir("cold-bloom-resume")
+    val part = new CrawlLoop(spark, cfg.copy(maxRounds = 2), pages, robots, Map.empty,
+      new SnapshotStore(root, spark)).run(seeds)
+    assert(part.roundsRun === 2)
+
+    val suffix = s"_${(root.hashCode & 0x7FFFFFFF).toHexString}"
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("graft_") && n.endsWith(suffix))
+      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
+
+    val spark2 = spark.newSession()
+    val store2 = new SnapshotStore(root, spark2)
+    val resumed = new CrawlLoop(spark2, cfg.copy(shards = 16), // changed shard config
+      spark2.createDataset(pagesV)(org.apache.spark.sql.Encoders.product[Page]).toDF(),
+      spark2.createDataset(Seq.empty[RobotsRule])(org.apache.spark.sql.Encoders.product[RobotsRule]),
+      Map.empty, store2).run(seeds)
+    assert(resumed.order(spark2).select("url").as(org.apache.spark.sql.Encoders.STRING).collect().toVector === fullOrder,
+      "bloom-on changed-shards resume diverged on crawl order")
+    assert(resumed.seen(spark2).select("url").as(org.apache.spark.sql.Encoders.STRING).collect().toSet === fullSeen,
+      "bloom-on changed-shards resume diverged on the seen set")
+    assert(resumed.roundsRun > 0 && resumed.roundsRun < full.roundsRun,
+      "resume must continue, not re-run committed rounds")
+    // every manifest, before and after the resume, records the creation count
+    (0 to store2.latestCommitted.get).foreach { k =>
+      assert(store2.committedMeta(k).flatMap(_.get("shards")) === Some(4L),
+        s"round $k manifest must carry the store's shard count")
+    }
     store2.clear()
   }
 
