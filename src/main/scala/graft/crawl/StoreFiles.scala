@@ -1,6 +1,6 @@
 package graft.crawl
 
-import java.io.{InputStream, OutputStream}
+import java.io.{IOException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -29,7 +29,8 @@ private[graft] object StoreFiles {
     val os = f.create(tmp, true)
     try body(os) finally os.close()
     f.delete(path, false)
-    f.rename(tmp, path)
+    // Hadoop reports a failed rename by returning false, not by throwing
+    if (!f.rename(tmp, path)) throw new IOException(s"rename $tmp -> $path failed")
   }
 
   /** `body` over the file's bytes; None when the file is absent */

@@ -44,7 +44,7 @@ object WarcFixture {
     (s"HTTP/1.1 200 OK\r\n${headers.mkString("\r\n")}\r\n\r\n").getBytes(US_ASCII) ++ body
   }
 
-  /** one WARC record (delegates to the engine's sink serializer) */
+  /** one WARC record (delegates to [[graft.sources.Warc.recordBytes]]) */
   def record(warcType: String, uri: Option[String], instant: java.time.Instant,
              payload: Array[Byte]): Array[Byte] =
     graft.sources.Warc.recordBytes(warcType, uri, instant,

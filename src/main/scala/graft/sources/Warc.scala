@@ -78,21 +78,6 @@ object Warc {
       .toDS()
   }
 
-  /** HTTP-response payload → RAW body bytes (headers stripped; chunked
-    * framing and content-encoding NOT undone — use [[Http.parse]] /
-    * [[toPages]] for the decoded form)
-    */
-  def httpBody(payload: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i + 3 < payload.length) {
-      if (payload(i) == '\r' && payload(i + 1) == '\n' &&
-        payload(i + 2) == '\r' && payload(i + 3) == '\n')
-        return java.util.Arrays.copyOfRange(payload, i + 4, payload.length)
-      i += 1
-    }
-    payload
-  }
-
   private val httpDecodeUdf = udf { (payload: Array[Byte]) =>
     Http.decodedBodyAndText(payload)
   }
@@ -130,40 +115,7 @@ object Warc {
       .withColumn("lang", graft.ops.TextAnalysis.langId(col("text")))
   }
 
-  /** STREAMING ingestion of a live crawl-drop directory: new `.warc` /
-    * `.warc.gz` files appearing under `path` surface incrementally as WARC
-    * records (Structured Streaming file tracking — each file is processed
-    * exactly once per checkpoint). Compose with [[toPages]] and a
-    * `writeStream` sink; all of toPages' decoding is streaming-compatible.
-    *
-    * Shape caveat vs the batch reader: Spark's `binaryFile` source hands
-    * over each file as ONE in-memory byte array (its contract), so a
-    * streamed archive must fit executor memory — Common Crawl's ~1 GB
-    * convention does; the batch [[readRecords]] path streams byte-by-byte
-    * and has no such bound. Parsing, verification (multi-member gzip CRC,
-    * lenient mode, maxRecordBytes) is the identical [[WarcIterator]].
-    */
-  def readRecordsStream(spark: SparkSession, path: String,
-                        lenient: Boolean = false,
-                        maxRecordBytes: Long = 1L << 30): Dataset[WarcRecord] = {
-    import spark.implicits._
-    spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        val raw = new java.io.ByteArrayInputStream(bytes)
-        val is: InputStream =
-          if (file.endsWith(".gz")) new MultiGzipInputStream(file, raw)
-          else raw
-        new WarcIterator(file, is, lenient, maxRecordBytes)
-      }
-  }
-
-  // ---- sink ----
+  // ---- record serialization (WarcFixture's archives) ----
 
   /** serialize one WARC record: version line + headers + sized payload +
     * the two-CRLF record separator (ISO 28500 §4)
@@ -187,205 +139,6 @@ object Warc {
     val g = new java.util.zip.GZIPOutputStream(bos)
     g.write(b); g.close()
     bos.toByteArray
-  }
-
-  /** WARC sink: write a Page-shaped frame (url, warc_ts, html) as
-    * `part-<partition>.warc.gz` archives under `dir` — one file per
-    * partition, one gzip member per record (Common Crawl's layout; reads
-    * straight back through [[readRecords]]/[[toPages]]). Each file leads
-    * with a warcinfo record. The html bytes are wrapped as an identity
-    * HTTP/1.1 200 response with a UTF-8 text/html Content-Type, so the
-    * round-trip through the HTTP decode layer is exact.
-    *
-    * TASK-COMMIT PROTOCOL (VERDICT r4 Wrong #2): every attempt writes to an
-    * attempt-unique staging path and atomically RENAMES into place on task
-    * success — a speculative or zombie duplicate attempt can therefore
-    * never interleave bytes into a visible file. The loser of a rename
-    * race sees the winner's committed file and deletes its own staging
-    * copy (both attempts serialize the same rows, so either commit is
-    * correct). Tasks never delete a final path; overwrite-of-a-previous-
-    * run's output happens once, driver-side, before the job starts.
-    *
-    * Scale shape: the inverse of the reader — file-level parallelism, one
-    * writer task per partition, streaming (never a whole partition in
-    * memory). Size partitions to the ~1 GB archive convention with
-    * repartition before calling. IO goes through the Hadoop FileSystem API
-    * with the SESSION's Hadoop configuration shipped to the tasks (S3
-    * credentials / fs settings intact — not a blank `Configuration()`).
-    */
-  def writePages(pages: DataFrame, dir: String): Unit = {
-    val sc = pages.sparkSession.sparkContext
-    val conf = new org.apache.spark.util.SerializableConfiguration(sc.hadoopConfiguration)
-    // driver-side overwrite, BEFORE the job: clear prior archives and any
-    // stale staging files once, so task attempts never have to delete a
-    // committed file (the zombie-deletes-the-winner hazard)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf.value)
-    if (fs.exists(dirPath)) {
-      fs.globStatus(new org.apache.hadoop.fs.Path(dir, "part-*.warc.gz"))
-        .foreach(st => fs.delete(st.getPath, false))
-      fs.delete(new org.apache.hadoop.fs.Path(dir, stagingDirName), true)
-    }
-    val rows = pages.select(col("url"), col("warc_ts"), col("html"))
-    rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val tc = org.apache.spark.TaskContext.get()
-      writePartitionFile(conf.value, dir, tc.partitionId(), tc.taskAttemptId(),
-        it.map(r => (r.getAs[String]("url"), r.getAs[java.sql.Timestamp]("warc_ts"),
-          r.getAs[Array[Byte]]("html"))))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(dir, stagingDirName), true)
-  }
-
-  private val stagingDirName = ".graft-staging"
-
-  /** One attempt's write-then-commit for one partition. Package-visible so
-    * the duplicate-attempt scenario is directly testable without staging a
-    * speculative execution inside a unit test.
-    */
-  private[graft] def writePartitionFile(
-      conf: org.apache.hadoop.conf.Configuration, dir: String, pid: Int, attemptId: Long,
-      rows: Iterator[(String, java.sql.Timestamp, Array[Byte])]): Unit = {
-    val finalPath = new org.apache.hadoop.fs.Path(f"$dir/part-$pid%05d.warc.gz")
-    val tmpPath = new org.apache.hadoop.fs.Path(
-      f"$dir/$stagingDirName/part-$pid%05d.attempt-$attemptId.warc.gz.tmp")
-    val fs = finalPath.getFileSystem(conf)
-    fs.mkdirs(tmpPath.getParent)
-    val out = fs.create(tmpPath, true)
-    var ok = false
-    try {
-      out.write(gzipMember(recordBytes("warcinfo", None, java.time.Instant.EPOCH,
-        "application/warc-fields",
-        s"software: graft\r\npartition: $pid\r\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-      rows.foreach { case (url, ts, html) =>
-        val payload =
-          ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n" +
-            s"Content-Length: ${html.length}\r\n\r\n").getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ html
-        out.write(gzipMember(recordBytes("response", Some(url), ts.toInstant,
-          "application/http; msgtype=response", payload)))
-      }
-      ok = true
-    } finally {
-      out.close()
-      if (!ok) fs.delete(tmpPath, false)
-    }
-    // task commit: atomic rename. HDFS refuses a rename onto an existing
-    // destination; the local FS (RawLocalFileSystem → File.renameTo) instead
-    // REPLACES it atomically on POSIX — so check existence first to keep the
-    // exactly-one-winner invariant on both filesystems. The exists→rename
-    // pair is not atomic, but a zombie losing the race only re-replaces the
-    // winner's byte-identical file (attempts serialize the same rows), so
-    // the worst case is a harmless double-commit, never a torn file.
-    if (fs.exists(finalPath)) {
-      fs.delete(tmpPath, false) // another attempt committed first
-    } else if (!fs.rename(tmpPath, finalPath)) {
-      if (fs.exists(finalPath)) fs.delete(tmpPath, false) // another attempt committed first
-      else throw new java.io.IOException(
-        s"WARC sink commit failed: rename $tmpPath -> $finalPath")
-    }
-  }
-
-  // ---------- CDX capture index + random-access record fetch ----------
-
-  /** One CDX-style index row per WARC record: where the record's gzip
-    * member sits in its archive file (`offset`, compressed `length`) plus
-    * the capture identity (url, timestamp, record type) and a SHA-256 hex
-    * digest of the raw record block. With it, a serving layer answers
-    * "give me this capture" with ONE ranged read of `length` bytes —
-    * never a scan — which is exactly how the Common Crawl index serves
-    * captures out of petabytes of `.warc.gz`. (Common Crawl's CDXJ uses
-    * SHA-1/base32 digests; this index keeps the repo-wide SHA-256
-    * convention — crawl content is adversarial and SHA-1 collisions are
-    * constructible.)
-    */
-  final case class CdxEntry(
-      url: String,
-      warc_ts: Timestamp,
-      warc_type: String,
-      digest: String,
-      offset: Long,
-      length: Long,
-      source_file: String)
-
-  private def sha256Hex(b: Array[Byte]): String = {
-    val d = java.security.MessageDigest.getInstance("SHA-256").digest(b)
-    val sb = new java.lang.StringBuilder(64)
-    d.foreach(x => sb.append(f"${x & 0xFF}%02x"))
-    sb.toString
-  }
-
-  private def readAllBytes(is: InputStream): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(1 << 16)
-    val buf = new Array[Byte](1 << 15)
-    var n = is.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = is.read(buf) }
-    out.toByteArray
-  }
-
-  /** Build the CDX index of the archives under `path` (glob ok).
-    *
-    * Requires the per-record-gzip-member layout (`.warc.gz` — Common
-    * Crawl's convention, and what [[writePages]] emits); a plain `.warc`
-    * fails loudly rather than yielding offsets nothing can seek to. A
-    * member holding several records (legal, unusual) indexes each record
-    * at the shared member frame. Strict parsing end to end: a corrupt
-    * member fails the task, because an index silently missing captures is
-    * worse than no index.
-    *
-    * Scale shape: one task per file (the WARC distribution axis), one
-    * streaming pass, nothing driver-side; output rows are ~100 bytes
-    * regardless of record size. Write the result as a partitioned table
-    * keyed however lookups arrive (url hash, registrable domain, time).
-    */
-  def cdxIndex(spark: SparkSession, path: String, minPartitions: Int = 0): Dataset[CdxEntry] = {
-    import spark.implicits._
-    val mp = if (minPartitions > 0) minPartitions else spark.sparkContext.defaultParallelism
-    spark.sparkContext.binaryFiles(path, mp)
-      .flatMap { case (file, pds) =>
-        require(file.endsWith(".gz"),
-          s"cdxIndex requires per-record-member .warc.gz archives, got $file")
-        val mg = new MultiGzipInputStream(
-          file, new BufferedInputStream(pds.open(), 1 << 16), perMember = true)
-        new Iterator[CdxEntry] {
-          private var batch: List[CdxEntry] = Nil
-          private def advance(): Unit = {
-            while (batch.isEmpty && mg.openNextMember()) {
-              val bytes = readAllBytes(mg) // to member end: memberEnd now valid
-              val start = mg.memberStart
-              val len = mg.memberEnd - start
-              val recs = new WarcIterator(file, new java.io.ByteArrayInputStream(bytes),
-                lenient = false, maxRecordBytes = 1L << 30)
-              batch = recs.map(r => CdxEntry(r.url, r.warc_ts, r.warc_type,
-                sha256Hex(r.payload), start, len, file)).toList
-            }
-            if (batch.isEmpty) mg.close()
-          }
-          override def hasNext: Boolean = { advance(); batch.nonEmpty }
-          override def next(): CdxEntry = {
-            if (!hasNext) throw new NoSuchElementException(file)
-            val h = batch.head; batch = batch.tail; h
-          }
-        }
-      }
-      .toDS()
-  }
-
-  /** Random-access fetch of one indexed capture: seek to `offset`, read
-    * `length` bytes, decode that one gzip member, parse its record(s).
-    * This is the CDX serving path — a driver/service-side point lookup
-    * (one ranged read), not a distributed operator.
-    */
-  def fetchRecordAt(spark: SparkSession, file: String, offset: Long, length: Long): Seq[WarcRecord] = {
-    require(length > 0 && length <= (1L << 31) - 1, s"bad member length $length")
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    try {
-      in.seek(offset)
-      val buf = new Array[Byte](length.toInt)
-      in.readFully(buf, 0, buf.length)
-      new WarcIterator(file, new MultiGzipInputStream(file, new java.io.ByteArrayInputStream(buf)),
-        lenient = false, maxRecordBytes = 1L << 30).toList
-    } finally in.close()
   }
 
   /** Streaming one-pass WARC record parser over one (possibly multi-member
@@ -533,8 +286,7 @@ object Warc {
     * Gzip header flags (FEXTRA/FNAME/FCOMMENT/FHCRC) are consumed per
     * RFC 1952.
     */
-  private[sources] final class MultiGzipInputStream(file: String, raw: InputStream,
-                                                    perMember: Boolean = false)
+  private[sources] final class MultiGzipInputStream(file: String, raw: InputStream)
       extends InputStream {
 
     private val in = new BufferedInputStream(raw, 1 << 16)
@@ -546,21 +298,11 @@ object Warc {
     private var inMember = false
     private var eof = false
     private val one = new Array[Byte](1)
-    // raw (compressed) position accounting, for the CDX index: rawRead
-    // counts bytes pulled from `in`; the cursor position subtracts what is
-    // staged in cbuf but not yet consumed. Valid at member boundaries —
-    // readTrailer reclaims the inflater's unconsumed bytes back into cbuf
-    // before these are read.
-    private var rawRead = 0L
-    private var mStart = 0L
-    private var mEnd = 0L
-    private var memberDone = false
-    private def rawPos: Long = rawRead - (cLen - cPos)
 
     private def fill(): Int = {
       if (cPos < cLen) return cLen - cPos
       val n = in.read(cbuf)
-      if (n < 0) -1 else { cPos = 0; cLen = n; rawRead += n; n }
+      if (n < 0) -1 else { cPos = 0; cLen = n; n }
     }
     private def readByte(): Int =
       if (fill() < 0) -1 else { val b = cbuf(cPos) & 0xFF; cPos += 1; b }
@@ -572,7 +314,6 @@ object Warc {
 
     /** false = clean EOF exactly at a member boundary */
     private def readHeader(): Boolean = {
-      mStart = rawPos
       val m1 = readByte()
       if (m1 < 0) return false
       val m2 = readByte()
@@ -614,31 +355,7 @@ object Warc {
       if (isize != (inf.getBytesWritten & 0xFFFFFFFFL))
         throw new java.util.zip.ZipException(s"$file: gzip member ISIZE mismatch")
       inMember = false
-      mEnd = rawPos
     }
-
-    /** Per-member mode: position at the next member's first decompressed
-      * byte (draining the current member if the caller abandoned it
-      * mid-read). false = clean EOF at a member boundary. After a true
-      * return, [[read]] yields this member's bytes then -1;
-      * [[memberStart]]/[[memberEnd]] frame the member's raw compressed
-      * bytes once it has been fully read.
-      */
-    private[sources] def openNextMember(): Boolean = {
-      require(perMember, s"$file: openNextMember outside per-member mode")
-      if (eof) return false
-      if (inMember) {
-        val junk = new Array[Byte](8192)
-        while (read(junk, 0, junk.length) >= 0) ()
-        if (eof) return false
-      }
-      memberDone = false
-      if (!readHeader()) { eof = true; false } else true
-    }
-    /** raw byte offset of the current member's gzip header */
-    private[sources] def memberStart: Long = mStart
-    /** raw byte offset one past the current member's gzip trailer */
-    private[sources] def memberEnd: Long = mEnd
 
     override def read(): Int = {
       val n = read(one, 0, 1)
@@ -646,14 +363,13 @@ object Warc {
     }
 
     override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (eof || (perMember && memberDone)) return -1
+      if (eof) return -1
       if (len == 0) return 0
       if (!inMember && !readHeader()) { eof = true; return -1 }
       var n = 0
       while (n == 0) {
         if (inf.finished()) {
           readTrailer()
-          if (perMember) { memberDone = true; return -1 }
           if (!readHeader()) { eof = true; return -1 }
         }
         if (inf.needsInput()) {

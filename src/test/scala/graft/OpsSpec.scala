@@ -487,4 +487,15 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(err.getMessage.toLowerCase.contains("type"))
   }
+
+  test("SQL-registered custom functions work from spark.sql") {
+    graft.functions.GraftFunctions.register(spark)
+    val dot = spark.sql("SELECT graft_dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
+      .as[Double].head()
+    assert(dot === 11.0)
+    val sig = spark.sql(
+      "SELECT size(graft_minhash_sig(graft_shingle_hashes('a b c d e', true, 3), 16, 42L)) AS n")
+      .as[Int].head()
+    assert(sig === 16)
+  }
 }

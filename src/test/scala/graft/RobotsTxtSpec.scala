@@ -262,4 +262,24 @@ class RobotsTxtSpec extends AnyFunSuite {
     assert(!e.getMessage.contains("other.test"), e.getMessage)
     assert(store.latestCommitted.isEmpty, "the guard runs before round 0 is written")
   }
+
+  test("robots Sitemap: directives parse globally, dedup, survive comments") {
+    val txt =
+      """# host robots
+        |User-agent: *
+        |Disallow: /tmp
+        |Sitemap: http://h0.test/sitemap.xml
+        |User-agent: bot
+        |Allow: /
+        |sitemap: http://h0.test/sitemap2.xml   # trailing comment
+        |Sitemap: http://h0.test/sitemap.xml
+        |Sitemap:
+        |""".stripMargin
+    assert(graft.robots.Robots.sitemapUrls(txt) ===
+      Vector("http://h0.test/sitemap.xml", "http://h0.test/sitemap2.xml"))
+    assert(graft.robots.Robots.sitemapUrls(null) === Vector.empty)
+    // group parsing is unaffected by interleaved Sitemap lines
+    val rule = graft.robots.Robots.parseRobotsTxt("h0.test", txt)
+    assert(rule.disallow === Seq("/tmp"))
+  }
 }

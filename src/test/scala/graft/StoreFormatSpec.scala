@@ -1,12 +1,16 @@
 package graft
 
-import graft.crawl.{CrawlLoop, SnapshotStore}
+import graft.crawl.{CrawlLoop, SnapshotStore, StoreFiles}
 import graft.filterset.BloomShards
 import graft.fixtures.Fixtures
 import graft.fixtures.Fixtures.FixtureConfig
 import graft.model._
+import java.io.IOException
+import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, RawLocalFileSystem, Path => HPath}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -80,4 +84,30 @@ class StoreFormatSpec extends AnyFunSuite {
     assert(text(s"$root/_commits/round_0.json") === """{"round":0,"frontier":1,"ord_next":0,"shards":4}""")
     store.clear()
   }
+
+  test("a rename that reports failure fails writeAtomic, naming the temp file and the target") {
+    // Hadoop's FileSystem cache is keyed by scheme and authority, so priming
+    // it with a Configuration that maps the scheme routes StoreFiles' own
+    // lookup to the same instance
+    val conf = new Configuration()
+    conf.set(s"fs.${NoRenameFileSystem.Scheme}.impl", classOf[NoRenameFileSystem].getName)
+    FileSystem.get(URI.create(s"${NoRenameFileSystem.Scheme}:///"), conf)
+    val dir = tmpDir("format-rename")
+    val target = new HPath(s"${NoRenameFileSystem.Scheme}://$dir/_commits/round_0.json")
+    val e = intercept[IOException](StoreFiles.writeText(target, "{}"))
+    assert(e.getMessage.contains(s"$target.tmp") && e.getMessage.contains(s"-> $target"), e.getMessage)
+    assert(!Files.exists(Paths.get(s"$dir/_commits/round_0.json")))
+  }
+}
+
+/** A local FileSystem under its own scheme whose rename reports failure the
+  * way Hadoop does: by returning false.
+  */
+class NoRenameFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${NoRenameFileSystem.Scheme}:///")
+  override def rename(src: HPath, dst: HPath): Boolean = false
+}
+
+object NoRenameFileSystem {
+  val Scheme = "graftnorename"
 }
