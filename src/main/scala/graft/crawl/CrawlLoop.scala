@@ -94,7 +94,7 @@ class CrawlLoop(
   /** canonicalize + dedupe seeds driver-side (a seed list is tiny);
     * seed i gets key (pord = -1, pos = i) — before every fetched page
     */
-  private def seedFrontier(seeds: Seq[String]): (DataFrame, Set[String]) = {
+  private def seedFrontier(seeds: Seq[String]): (DataFrame, Seq[FrontierEntry]) = {
     val entries = seeds.zipWithIndex
       .flatMap { case (s, i) =>
         Urls.canonicalizeAbsolute(s)
@@ -105,7 +105,7 @@ class CrawlLoop(
     val df = spark.createDataset(entries).toDF()
       .withColumn("urlHash", xxhash64(col("url")))
       .select(fc: _*)
-    (df, entries.map(_.host).toSet)
+    (df, entries)
   }
 
   /** one table per round serves as BOTH frontier delta and seen delta:
@@ -114,18 +114,22 @@ class CrawlLoop(
   private def readFrontier(k: Int): DataFrame = {
     val paths = Seq("carry", "fresh").filter(store.exists(_, k)).map(store.tablePath(_, k))
     require(paths.nonEmpty, s"no frontier data for round $k")
-    spark.read.parquet(paths: _*).select(fc: _*)
+    spark.read.schema(SnapshotStore.FrontierSchema).parquet(paths: _*).select(fc: _*)
   }
 
-  private def initRound0(seeds: Seq[String]): Unit = {
-    val (f0, _) = seedFrontier(seeds)
+  /** round 0 = the seeds: written, folded into the bloom shards and
+    * committed with their driver-side count (no read-back job) once
+    * `robotsChecked` passed
+    */
+  private def initRound0(seeds: Seq[String], robotsChecked: Future[Unit]): Unit = {
+    val (f0, entries) = seedFrontier(seeds)
     store.write("fresh", 0, f0)
     BloomShards.update(spark,
       store.read("fresh", 0)
         .select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
       None, store.bloomDir(0), cfg)
-    val n = store.read("fresh", 0).count()
-    store.commit(0, Map("frontier" -> n, "ord_next" -> 0L, "shards" -> cfg.shards.toLong))
+    Await.result(robotsChecked, Duration.Inf)
+    store.commit(0, Map("frontier" -> entries.size.toLong, "ord_next" -> 0L, "shards" -> cfg.shards.toLong))
   }
 
   /** Seen set as of round k, as SNAPSHOT PARTS for chained anti-joins: the
@@ -166,14 +170,17 @@ class CrawlLoop(
 
   /** Run (or resume) the crawl to completion. */
   def run(seeds: Seq[String]): CrawlOutcome = {
-    val (_, seedHosts) = seedFrontier(seeds)
+    val seedHosts = seedFrontier(seeds)._2.map(_.host).toSet
     require(seedHosts.nonEmpty,
       s"no seed URL canonicalized to a fetchable absolute URL (seeds: ${seeds.take(5).mkString(", ")}…)")
-    if (!robotsEmpty) Robots.requireUniqueHosts(robots)
+    // the robots guard (an aggregation over the rules) runs alongside the
+    // seed write and bloom; nothing commits and no round runs before it passed
+    val robotsChecked = Future(if (!robotsEmpty) Robots.requireUniqueHosts(robots))
     val startRound = store.latestCommitted match {
       case Some(k) => k
-      case None => initRound0(seeds); 0
+      case None => initRound0(seeds, robotsChecked); 0
     }
+    Await.result(robotsChecked, Duration.Inf)
     var k = startRound
     var frontierCount = store.committedMeta(k).flatMap(_.get("frontier"))
       .getOrElse(readFrontier(k).count())
@@ -205,26 +212,39 @@ class CrawlLoop(
         frontierCount, pages,
         robots, robotsEmpty, seen, Some(store.bloomDir(k)), seedHosts, runners, ordBase)
 
-      // The output jobs read only the round's checkpoints and run CONCURRENTLY
-      // (fresh = next frontier delta AND seen delta). All settle before release:
-      // none reads a freed block, no straggler writes into a resumed store.
-      val statRows = try {
-        val statsF = Future(out.stats.collect())
-        val outputF = Seq(
-          Future(store.write("fresh", k + 1, out.fresh)),
+      // Outputs run CONCURRENTLY as soon as their inputs exist: the order,
+      // results and carry writes read only the fetch-side checkpoints, so
+      // they start before discovery and overlap it; the fresh write (= next
+      // frontier delta AND seen delta), the bloom update and the lineage
+      // counts follow discovery. All settle before release, also on a
+      // failure: none reads a freed block, no straggler writes into a
+      // resumed store.
+      val (statRows, freshByShard) = try {
+        val early = Seq(
           Future(store.write("order", k, out.order)),
-          Future(store.write("results", k, out.results)),
-          Future(store.write("carry", k + 1, out.carry)),
-          Future(BloomShards.update(spark,
-            out.fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
-            Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg)))
-        (statsF +: outputF).foreach(Await.ready(_, Duration.Inf))
-        outputF.foreach(_.value.get.get)
-        statsF.value.get.get
+          Future(store.write("results", k, out.results())),
+          Future(store.write("carry", k + 1, out.carry())))
+        val (fresh, stats) =
+          try out.discover()
+          catch { case e: Throwable => early.foreach(Await.ready(_, Duration.Inf)); throw e }
+        val statsF = Future(stats.collect())
+        val bloomF = Future(BloomShards.update(spark,
+          fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
+          Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg))
+        val all = early ++ Seq(statsF, bloomF, Future(store.write("fresh", k + 1, fresh)))
+        all.foreach(Await.ready(_, Duration.Inf))
+        all.foreach(_.value.get.get)
+        (statsF.value.get.get, bloomF.value.get.get)
       } finally out.release()
+      // per shard: the stats' stage counts plus "fresh" = the keys the bloom
+      // update inserted (exactly the fresh rows; shards with none are absent)
+      val counts: Map[Int, Map[String, Long]] =
+        statRows.groupBy(_.getInt(0)).map { case (shard, rows) =>
+          shard -> (rows.map(r => r.getString(1) -> r.getLong(2)).toMap ++
+            freshByShard.get(shard).map("fresh" -> _)).withDefaultValue(0L)
+        }
       // next frontier = carry ∪ fresh = deferred ∪ retries ∪ fresh: exact, no count job
-      frontierCount = statRows.filter(r => Set("fresh", "budget_deferred", "retries")(r.getString(1)))
-        .map(_.getLong(2)).sum
+      frontierCount = counts.values.map(m => m("fresh") + m("budget_deferred") + m("retries")).sum
       if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
         store.writeBucketed("seen_all", k + 1,
           readSeen(k).reduce(_ unionByName _)
@@ -236,8 +256,7 @@ class CrawlLoop(
       // most the round that was going to be re-run anyway. The rows live on
       // the driver — one small FS write, no Spark job.
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      val lineage = statRows.groupBy(_.getInt(0)).map { case (shard, rows) =>
-        val m = rows.map(r => r.getString(1) -> r.getLong(2)).toMap.withDefaultValue(0L)
+      val lineage = counts.map { case (shard, m) =>
         Lineage(k, shard, m("admitted"), m("fetched"), m("discovered"),
           m("discovered") - m("fresh"), m("robots_dropped"), m("budget_deferred"),
           m("errors"), m("retries"), wallMs)

@@ -22,8 +22,27 @@ import scala.collection.mutable.ArrayBuffer
   * whenever the frontier is small enough), and the dedup anti-join (whose
   * left input the sharded bloom pre-filter thins first). The page store is
   * always the streamed side; discovered-link extraction is pure Catalyst
-  * built-ins inside whole-stage codegen. Every intermediate read twice is
-  * an eager local checkpoint: later plans start from a leaf, not a cache.
+  * built-ins inside whole-stage codegen.
+  *
+  * Checkpoints: a frame is an eager local checkpoint (a leaf for later
+  * plans, not a cache) only where a second reader or a plan cut pays for
+  * the job it costs. A round runs six executions before its last outputs,
+  * five of them one after another:
+  *  - the bounded overflow-host collect inside [[Politeness.partition]];
+  *  - the politeness split frame (through its `persist` hook): admitted
+  *    and deferred are filters of it, so its two window exchanges run once;
+  *  - `hits`: the fetch join and link extraction, read by the order,
+  *    results, misses, ordinal and lineage plans;
+  *  - `misses` (admitted but not in the store): read by the carry and
+  *    results writes and the lineage counts;
+  *  - `winnowed`: read twice by the bloom split and again by lineage;
+  *  - `fresh`: read by the fresh write and by the bloom update.
+  * The order, results and carry writes need only the fetch side, so they
+  * start once `hits` exists and run while discovery (`winnowed`, `fresh`)
+  * does ([[RoundOut.discover]]); the first of them to need `misses`
+  * checkpoints it, also off the critical path. Not checkpointed: the
+  * frontier (a projected scan of carry ∪ fresh, cheaper to re-read than
+  * to checkpoint) and the ordinal-ranked hits (read once, by the winnow).
   *
   * Failure: checkpoint blocks are executor-local and cannot be recomputed
   * from lineage, so losing an executor FAILS the round instead of silently
@@ -113,21 +132,31 @@ object CrawlRound {
         * read time so ONE written table (fresh) serves as both the frontier
         * delta and the seen-set delta
         */
-      carry: DataFrame,
-      fresh: DataFrame,
+      carry: () => DataFrame,
       order: DataFrame,
-      results: DataFrame,
-      /** (shard, stage, count) raw lineage counts */
-      stats: DataFrame,
+      results: () => DataFrame,
+      /** Runs discovery (the winnow and fresh checkpoints) and returns
+        * (fresh, stats); stats = (shard, stage, count) raw lineage counts,
+        * with no "fresh" stage. carry, order and results read only the
+        * fetch side (the first caller of carry or results checkpoints the
+        * misses), so their writes can run meanwhile.
+        */
+      discover: () => (DataFrame, DataFrame),
       /** frees the checkpoint blocks once every job reading them settled */
       release: () => Unit)
 
   /** Eager local checkpoint: a leaf plan with no CacheManager entry. Its RDD
     * goes to `kept`, since `Dataset.unpersist` is a no-op on a checkpoint.
+    * Columns are re-aliased first, so the leaf's attribute ids are its own:
+    * a checkpoint keeps the ids of the plan it was cut from, and two leaves
+    * cut from one frontier (the split frame and `misses`) would otherwise
+    * share ids in one plan — where the optimizer can bind an id to the
+    * wrong leaf (seen: carry's incremented `attempt` read back unchanged
+    * once the union's empty deferred branch was pruned).
     */
   private def checkpoint(kept: ArrayBuffer[RDD[_]])(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    kept += c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    val c = df.select(df.columns.map(n => col(n).as(n)): _*).localCheckpoint()
+    kept.synchronized(kept += c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd)
     c
   }
 
@@ -153,11 +182,13 @@ object CrawlRound {
       ordBase: Long): RoundOut = {
     import spark.implicits._
     val kept = ArrayBuffer.empty[RDD[_]]
-    val release = () => { kept.foreach(_.unpersist(blocking = false)); kept.clear() }
+    val release = () => kept.synchronized { kept.foreach(_.unpersist(blocking = false)); kept.clear() }
     val keep = checkpoint(kept) _
     try {
       val fc = FrontierCols.map(col)
-      val f = keep(frontier.select(fc: _*))
+      // a projection of a leaf scan of carry ∪ fresh: every reader re-reads
+      // the files, which costs less than the job a checkpoint would take
+      val f = frontier.select(fc: _*)
 
       // 1-2. robots filter (broadcast join, no shuffle)
       val (allowed, robotsDropped) =
@@ -176,12 +207,9 @@ object CrawlRound {
                 greatest(lit(1L), (lit(cfg.roundWallMs) / col("crawlDelayMs")).cast("long")))
                 .cast("int").as("__budget")))
         else None
-      // the politeness split's frames are checkpointed THROUGH the hook so
-      // the salted window exchange over the skewed subset runs once per
-      // round, not once per (admitted, deferred) branch
-      val (admitted0, deferred0) = Politeness.partition(allowed, cfg, hostBudgets, persist = keep)
-      val admitted = keep(admitted0.select(fc: _*))
-      val deferred = keep(deferred0.select(fc: _*))
+      // the hook checkpoints the split frame both outputs filter, so the
+      // politeness windows run once per round, not once per branch
+      val (admitted, deferred) = Politeness.partition(allowed, cfg, hostBudgets, persist = keep)
 
       // 4. the "fetch": join against the page store on urlHash (fetchJoin).
       // The store is the big streamed side — shuffle-free when bucketed by
@@ -199,23 +227,24 @@ object CrawlRound {
         .select((fc ++ pageCols :+ col("redir") :+ col("links")): _*)
         .transform(keep)
 
+      // misses (admitted, not in the store) feed the carry and results
+      // writes and the lineage counts. Checkpointed on first use — by the
+      // output thread that writes carry or results — so the anti-join runs
+      // while discovery does, off the round's critical path.
       val hitKeys = hits.select("url", "urlHash")
-      val misses = seenAntiJoin(admitted,
-        if (frontierCount <= cfg.broadcastFrontierMaxRows) broadcast(hitKeys) else hitKeys)
-      val retries = keep(misses
-        .filter(col("attempt") + 1 < cfg.maxTries)
-        .withColumn("attempt", col("attempt") + 1)
-        .select(fc: _*))
-      val exhausted = misses.filter(col("attempt") + 1 >= cfg.maxTries)
+      // a frontier too large to broadcast keeps a sort-merge anti-join: AQE
+      // would otherwise convert it to a broadcast join after both shuffles
+      // already ran, one more job for a join that is already planned
+      lazy val misses = keep(seenAntiJoin(admitted,
+        if (frontierCount <= cfg.broadcastFrontierMaxRows) broadcast(hitKeys) else hitKeys.hint("merge")))
+      val retry = col("attempt") + 1 < cfg.maxTries
 
       // 5. crawl order rows for every successful fetch
       val order = hits.select(col("url"), lit(round).as("round"), col("depth"),
         col("pord"), col("pos"))
 
-      // results: fetch errors + redirect records + runner outputs
-      val errResults = exhausted.select(col("url"), lit(round).as("round"),
-        lit("__fetch__").as("runner"), lit(null).cast("string").as("result"),
-        lit("fetch-miss").as("error"))
+      // results: fetch errors (exhausted misses) + redirect records + runner
+      // outputs
       val redirResults = hits.filter(col("redir").isNotNull)
         .select(col("url"), lit(round).as("round"), lit("__redirect__").as("runner"),
           col("redir").as("result"), lit(null).cast("string").as("error"))
@@ -238,120 +267,111 @@ object CrawlRound {
               }
             }.toDF()
         }
-      val results = errResults.unionByName(redirResults).unionByName(runnerResults)
+      val results = () => misses.filter(!retry)
+        .select(col("url"), lit(round).as("round"), lit("__fetch__").as("runner"),
+          lit(null).cast("string").as("result"), lit("fetch-miss").as("error"))
+        .unionByName(redirResults).unionByName(runnerResults)
 
-      // 5b. discovery. First mint this round's fetch ordinals (one range
-      // shuffle over the depth-eligible hits; children inherit them as pord),
-      // then Catalyst-planned link extraction (codegen'd built-ins);
-      // canonicalize+host is ONE UDF pass (the only UDF on the hot path)
-      val ranked = keep(assignOrdinals(
-        hits.filter(lit(cfg.maxDepth) >= col("depth") + 1)
-          .select(col("url"), col("depth"), col("pord"), col("pos"), col("redir"), col("links")),
-        ordBase, math.max(1, cfg.shards)))
+      // 5c. carry-over rows (next frontier = carry ∪ fresh at read time)
+      val carry = () => deferred.unionByName(
+        misses.filter(retry).withColumn("attempt", col("attempt") + 1).select(fc: _*))
 
-      // post-canonicalize URL transform: prefix rewrite, then the opt-in
-      // tracking-param strip — SAME composition as the oracle's `post`.
-      // Host recomputes only under rewrite (the strip is query-only and
-      // cannot change the host), so the no-op config stays zero-cost.
-      def canonHost(base: Column, raw: Column): (Column, Column) = {
+      val discover = () => {
+        // 5b. discovery. Mint this round's fetch ordinals (one range shuffle
+        // over the depth-eligible hits; children inherit them as pord), then
+        // build every candidate in ONE pass: a page's outlinks, or its
+        // redirect target (pos 0) when redirects are followed — a redirect
+        // page has no link candidates. Link extraction is Catalyst built-ins
+        // (codegen'd); canonicalize+host is ONE UDF pass (the only UDF on the
+        // hot path). The ordinals are read exactly once, by the winnow below,
+        // so their values never depend on a recomputation.
+        val ranked = assignOrdinals(
+          hits.filter(lit(cfg.maxDepth) >= col("depth") + 1)
+            .select(col("url"), col("depth"), col("pord"), col("pos"), col("redir"), col("links")),
+          ordBase, math.max(1, cfg.shards))
+        val isRedir = col("redir").isNotNull
+        val targets =
+          if (cfg.followRedirects) when(isRedir, array(col("redir"))).otherwise(col("links"))
+          else when(!isRedir, col("links"))
+
+        // post-canonicalize URL transform: prefix rewrite, then the opt-in
+        // tracking-param strip — SAME composition as the oracle's `post`.
+        // Host recomputes only under rewrite (the strip is query-only and
+        // cannot change the host), so the no-op config stays zero-cost.
         val rewritten = cfg.rewrite match {
           case None    => col("ch._1")
           case Some(_) => Policy.rewriteCol(cfg.rewrite, col("ch._1"))
         }
-        val c = if (cfg.stripTracking) UrlFunctions.stripTrackingCol(rewritten) else rewritten
-        val host = if (cfg.rewrite.isDefined) UrlFunctions.hostOfUdf(c) else col("ch._2")
-        (c, host)
-      }
-      val linkCand = {
-        val (curl, chost) = canonHost(col("parentUrl"), col("href"))
-        ranked
-          .filter(col("redir").isNull)
-          .select(col("url").as("parentUrl"), col("depth"), col("ord"),
-            posexplode(col("links")).as(Seq("pos", "href")))
-          .withColumn("ch", UrlFunctions.canonicalizeWithHost(col("parentUrl"), col("href")))
+        val curl = if (cfg.stripTracking) UrlFunctions.stripTrackingCol(rewritten) else rewritten
+        val chost = if (cfg.rewrite.isDefined) UrlFunctions.hostOfUdf(curl) else col("ch._2")
+        val candidates = ranked
+          .select(col("url"), col("depth"), col("ord"), isRedir.as("__redir"),
+            posexplode(targets).as(Seq("pos", "href")))
+          .withColumn("ch", UrlFunctions.canonicalizeWithHost(col("url"), col("href")))
           .filter(col("ch").isNotNull)
           .withColumn("curl", curl)
           .withColumn("chost", chost)
-          .filter(Policy.allowsCol(cfg.policy, col("curl"), col("chost"), seedHosts))
+          .filter(when(col("__redir"), Policy.allowsCol(cfg.redirectPolicy, col("curl"), col("chost"), seedHosts))
+            .otherwise(Policy.allowsCol(cfg.policy, col("curl"), col("chost"), seedHosts)))
           .select(col("curl").as("url"), xxhash64(col("curl")).as("urlHash"),
             col("chost").as("host"), (col("depth") + 1).as("depth"),
             col("ord").as("pord"), col("pos").cast("long").as("pos"),
             lit(0).as("attempt"))
-      }
 
-      val redirCand =
-        if (!cfg.followRedirects) linkCand.limit(0)
-        else {
-          val (curl, chost) = canonHost(col("url"), col("redir"))
-          ranked
-            .filter(col("redir").isNotNull)
-            .withColumn("ch", UrlFunctions.canonicalizeWithHost(col("url"), col("redir")))
-            .filter(col("ch").isNotNull)
-            .withColumn("curl", curl)
-            .withColumn("chost", chost)
-            .filter(Policy.allowsCol(cfg.redirectPolicy, col("curl"), col("chost"), seedHosts))
-            .select(col("curl").as("url"), xxhash64(col("curl")).as("urlHash"),
-              col("chost").as("host"), (col("depth") + 1).as("depth"),
-              col("ord").as("pord"), lit(0L).as("pos"),
-              lit(0).as("attempt"))
+        // 6. dedup: within-round winner = min (pord, pos) per url — first
+        // enqueue wins, as in the reference's seen-at-enqueue Map. A hash
+        // aggregate, NOT a window: partial (map-side) aggregation collapses the
+        // duplicate-heavy candidate stream before it ever shuffles (and the
+        // fixed-width key keeps it a HashAggregate), where a window would
+        // shuffle + sort every candidate row. The duplicate count rides along
+        // in the same aggregate, so the raw candidate stream is consumed
+        // exactly once and never checkpointed. Then the EXACT anti-join vs the seen
+        // set; bloom shards pre-filter so rows the filter proves unseen skip
+        // the anti-join shuffle entirely.
+        val winnowed = keep(candidates
+          .groupBy(col("url"))
+          .agg(min(struct(col("pord"), col("pos"), col("depth"), col("urlHash"), col("host"), col("attempt"))).as("m"),
+            count(lit(1)).as("__dups"))
+          .select(col("url"), col("m.urlHash").as("urlHash"), col("m.host").as("host"),
+            col("m.depth").as("depth"), col("m.pord").as("pord"), col("m.pos").as("pos"),
+            col("m.attempt").as("attempt"), col("__dups")))
+        def antiAllSeen(cand: DataFrame): DataFrame =
+          seenParts.foldLeft(cand)((df, s) => seenAntiJoin(df, s))
+        val fresh0 = bloomDirPrev match {
+          case Some(dir) if cfg.bloomPrefilter =>
+            val w = winnowed.select(fc: _*).withColumn("__maybe",
+              BloomShards.mightBeSeen(dir)(BloomShards.shardCol(col("urlHash"), cfg.shards), col("urlHash")))
+            val definitelyNew = w.filter(!col("__maybe")).select(fc: _*)
+            val needExact = antiAllSeen(w.filter(col("__maybe")).select(fc: _*))
+            definitelyNew.unionByName(needExact)
+          case _ =>
+            antiAllSeen(winnowed.select(fc: _*))
         }
+        val fresh = keep(fresh0.select(fc: _*))
 
-      val candidates = linkCand.unionByName(redirCand)
+        // per-shard lineage counts: one aggregation in the output phase over
+        // the frontier scan and the checkpoints, with no join. The robots
+        // split partitions the frontier, so robots drops are counted by
+        // difference: dropped = frontier - admitted - deferred. "discovered"
+        // (pre-dedup) is the winnow aggregate's duplicate counts — no extra
+        // pass over the raw candidate stream. Per-shard "fresh" is the bloom
+        // update's insert count (CrawlLoop).
+        def tag(df: DataFrame, tags: (Column, Column)*): DataFrame =
+          df.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"),
+            explode(array(tags.map { case (stage, w) => struct(stage.as("stage"), w.as("w")) }: _*)).as("t"))
+        val one = lit(1L)
+        val stats = tag(f, lit("robots_dropped") -> one)
+          .unionByName(tag(admitted, lit("admitted") -> one, lit("robots_dropped") -> lit(-1L)))
+          .unionByName(tag(deferred, lit("budget_deferred") -> one, lit("robots_dropped") -> lit(-1L)))
+          .unionByName(tag(hits, lit("fetched") -> one))
+          .unionByName(tag(misses, when(retry, "retries").otherwise("errors") -> one))
+          .unionByName(tag(winnowed, lit("discovered") -> col("__dups")))
+          .groupBy(col("shard"), col("t.stage").as("stage")).agg(sum(col("t.w")).as("count"))
 
-      // 6. dedup: within-round winner = min (pord, pos) per url — first
-      // enqueue wins, as in the reference's seen-at-enqueue Map. A hash
-      // aggregate, NOT a window: partial (map-side) aggregation collapses the
-      // duplicate-heavy candidate stream before it ever shuffles (and the
-      // fixed-width key keeps it a HashAggregate), where a window would
-      // shuffle + sort every candidate row. The duplicate count rides along
-      // in the same aggregate, so the raw candidate stream is consumed
-      // exactly once and never checkpointed. Then the EXACT anti-join vs the seen
-      // set; bloom shards pre-filter so rows the filter proves unseen skip
-      // the anti-join shuffle entirely.
-      val winnowed = keep(candidates
-        .groupBy(col("url"))
-        .agg(min(struct(col("pord"), col("pos"), col("depth"), col("urlHash"), col("host"), col("attempt"))).as("m"),
-          count(lit(1)).as("__dups"))
-        .select(col("url"), col("m.urlHash").as("urlHash"), col("m.host").as("host"),
-          col("m.depth").as("depth"), col("m.pord").as("pord"), col("m.pos").as("pos"),
-          col("m.attempt").as("attempt"), col("__dups")))
-      def antiAllSeen(cand: DataFrame): DataFrame =
-        seenParts.foldLeft(cand)((df, s) => seenAntiJoin(df, s))
-      val fresh0 = bloomDirPrev match {
-        case Some(dir) if cfg.bloomPrefilter =>
-          val w = winnowed.select(fc: _*).withColumn("__maybe",
-            BloomShards.mightBeSeen(dir)(BloomShards.shardCol(col("urlHash"), cfg.shards), col("urlHash")))
-          val definitelyNew = w.filter(!col("__maybe")).select(fc: _*)
-          val needExact = antiAllSeen(w.filter(col("__maybe")).select(fc: _*))
-          definitelyNew.unionByName(needExact)
-        case _ =>
-          antiAllSeen(winnowed.select(fc: _*))
+        (fresh, stats)
       }
-      val fresh = keep(fresh0.select(fc: _*))
 
-      // 7. carry-over rows (next frontier = carry ∪ fresh at read time)
-      val carry = deferred.select(fc: _*).unionByName(retries)
-
-      // per-shard lineage counts, one aggregation job over checkpointed inputs;
-      // "discovered" (pre-dedup) is reconstructed from the winnow aggregate's
-      // duplicate counts — no extra pass over the raw candidate stream
-      def tag(df: DataFrame, stage: String): DataFrame =
-        df.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"),
-          lit(stage).as("stage"), lit(1L).as("w"))
-      val stats = tag(f, "frontier")
-        .unionByName(tag(robotsDropped, "robots_dropped"))
-        .unionByName(tag(deferred, "budget_deferred"))
-        .unionByName(tag(admitted, "admitted"))
-        .unionByName(tag(hits, "fetched"))
-        .unionByName(tag(retries, "retries"))
-        .unionByName(tag(exhausted, "errors"))
-        .unionByName(winnowed.select(
-          BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"),
-          lit("discovered").as("stage"), col("__dups").as("w")))
-        .unionByName(tag(fresh, "fresh"))
-        .groupBy(col("shard"), col("stage")).agg(sum(col("w")).as("count"))
-
-      RoundOut(carry, fresh, order, results, stats, release)
+      RoundOut(carry, order, results, discover, release)
     } catch { case e: Throwable => release(); throw e }
   }
 }

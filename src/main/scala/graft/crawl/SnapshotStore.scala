@@ -1,8 +1,9 @@
 package graft.crawl
 
-import graft.model.Lineage
+import graft.model.{CrawlOrderRow, FrontierEntry, Lineage, RunnerResult}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-semantics table store without Iceberg (SURVEY.md §7.5 — no
   * Iceberg/Delta jar exists in the sandbox and egress is disabled).
@@ -84,8 +85,14 @@ class SnapshotStore(val root: String, spark: SparkSession) {
     }
   }
 
+  /** A reader for `table`: the crawl's own tables carry their known schema,
+    * so reading one back starts no footer-inference job.
+    */
+  private def reader(table: String): DataFrameReader =
+    SnapshotStore.Schemas.get(table).fold(spark.read)(spark.read.schema(_))
+
   def read(table: String, round: Int): DataFrame =
-    spark.read.parquet(tablePath(table, round))
+    reader(table).parquet(tablePath(table, round))
 
   /** union of rounds 0..round that exist for `table` (e.g. the incremental
     * seen-set additions; Iceberg analog: snapshot-as-of read)
@@ -93,7 +100,7 @@ class SnapshotStore(val root: String, spark: SparkSession) {
   def readUpTo(table: String, round: Int): DataFrame = {
     val paths = (0 to round).filter(exists(table, _)).map(tablePath(table, _))
     require(paths.nonEmpty, s"no committed data for $table up to round $round")
-    spark.read.parquet(paths: _*)
+    reader(table).parquet(paths: _*)
   }
 
   /** largest round <= upTo for which `table` has a data dir */
@@ -141,7 +148,7 @@ class SnapshotStore(val root: String, spark: SparkSession) {
           .select("url", "urlHash")
         if (deltas.isEmpty) Seq(base)
         else Seq(
-          spark.read.parquet(deltas.map(tablePath("fresh", _)): _*)
+          reader("fresh").parquet(deltas.map(tablePath("fresh", _)): _*)
             .select("url", "urlHash"),
           base)
       case None => Seq(readUpTo("fresh", k).select("url", "urlHash"))
@@ -159,4 +166,16 @@ class SnapshotStore(val root: String, spark: SparkSession) {
       .filter(n => n.startsWith("graft_") && n.endsWith(catalogSuffix))
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
   }
+}
+
+object SnapshotStore {
+  /** columns of `fresh` and `carry`, in the order the crawl writes them */
+  val FrontierSchema: StructType = Encoders.product[FrontierEntry].schema
+
+  /** the written schema of each per-round table the crawl reads back */
+  private val Schemas: Map[String, StructType] = Map(
+    "fresh" -> FrontierSchema,
+    "carry" -> FrontierSchema,
+    "order" -> Encoders.product[CrawlOrderRow].schema,
+    "results" -> Encoders.product[RunnerResult].schema)
 }

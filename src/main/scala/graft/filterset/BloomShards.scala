@@ -95,10 +95,11 @@ object BloomShards extends Serializable {
   /** Fold `newHashes` (columns: shard int, urlHash long) into the previous
     * round's shard filters: merged filters for TOUCHED shards are written
     * under `newDir` (one task per touched shard); untouched shards carry
-    * forward by reference in the shard map.
+    * forward by reference in the shard map. Returns the number of hashes
+    * inserted per touched shard (untouched shards are absent).
     */
   def update(spark: SparkSession, newHashes: DataFrame, prevDir: Option[String],
-             newDir: String, cfg: CrawlConfig): Unit = {
+             newDir: String, cfg: CrawlConfig): Map[Int, Long] = {
     import spark.implicits._
     val expected = cfg.bloomExpectedPerShard
     val prevMap: Map[Int, String] = prevDir.map(readShardMap).getOrElse(Map.empty)
@@ -116,10 +117,10 @@ object BloomShards extends Serializable {
         (shard, n)
       }
       .collect()
-      .map(_._1)
-      .toSet
+      .toMap
     StoreFiles.writeText(mapFile(newDir),
-      (prevMap ++ touched.map(_ -> newDir)).map { case (s, d) => s""""$s":"$d"""" }.mkString("{", ",", "}"))
+      (prevMap ++ touched.keys.map(_ -> newDir)).map { case (s, d) => s""""$s":"$d"""" }.mkString("{", ",", "}"))
+    touched
   }
 
   // JVM-wide probe-side cache: (dir, shard) -> filter. Round dirs are unique

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -25,21 +24,14 @@ object Dedup {
     */
   private[graft] def contentKey(textCol: String): Column = sha2(col(textCol), 256)
 
-  /** Exact-duplicate groups by content hash: (h, n, keep) for groups >1. */
+  /** Exact-duplicate groups by content hash: (h, n, keep) for groups >1.
+    * Groups on the 32-byte sha-256 key, NOT the text itself: multi-KB
+    * documents must never be shuffle keys.
+    */
   def exactDupGroups(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs.groupBy(contentKey(textCol).as("h"))
       .agg(count(lit(1)).as("n"), min(col(idCol)).as("keep"))
       .filter(col("n") > 1)
-
-  /** Keep one row (min id) per distinct text — the exact-dedup pass.
-    * The window partitions on the content hash, NOT the text itself:
-    * multi-KB documents must never be shuffle/sort keys (32-byte keys
-    * instead; same grouping as [[exactDupGroups]]/[[dedupCorpus]]).
-    */
-  def exactDedup(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(contentKey(textCol)).orderBy(col(idCol))
-    docs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
 
   // ---------- shingles / minhash ----------
 

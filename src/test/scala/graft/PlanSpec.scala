@@ -157,23 +157,23 @@ class PlanSpec extends AnyFunSuite {
       s"deferred must come from splitting the ranked frame, not an anti-join:\n$deferredPlan")
   }
 
-  test("exactDedup windows on the 32-byte sha-256 key, never the raw text column") {
+  test("exactDupGroups groups on the 32-byte sha-256 key, never the raw text column") {
     import spark.implicits._
     val docs = Seq((3L, "same text"), (1L, "same text"), (2L, "other text"))
       .toDF("doc_id", "text")
-    val out = graft.ops.Dedup.exactDedup(docs)
-    assert(out.select("doc_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L),
-      "min-id row per distinct text survives")
+    val out = graft.ops.Dedup.exactDupGroups(docs)
+    assert(out.select("n", "keep").as[(Long, Long)].collect().toSeq === Seq((2L, 1L)),
+      "one group of two, keeping the min id")
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("hashpartitioning(text#") && !plan.contains("hashpartitioning(text,"),
       s"multi-KB documents must not be shuffle keys:\n$plan")
-    // the executed plan pre-projects the key into _w0 (and a LocalRelation
-    // input even constant-folds it); the sha2 key is asserted on the
-    // analyzed plan, the shuffle-key shape on the executed plan above.
-    // sha-256 not md5: crawl text is adversarial, md5 collisions are
-    // constructible, and a collided pair would silently drop a document.
+    // the sha2 key is asserted on the analyzed plan (a LocalRelation input
+    // may constant-fold it out of the executed plan), the shuffle-key shape
+    // on the executed plan above. sha-256 not md5: crawl text is
+    // adversarial, md5 collisions are constructible, and a collided pair
+    // would silently merge two documents.
     val analyzed = out.queryExecution.analyzed.toString
-    assert(analyzed.contains("sha2"), s"expected the sha2 window key in:\n$analyzed")
+    assert(analyzed.contains("sha2"), s"expected the sha2 group key in:\n$analyzed")
   }
 
   test("ivfTopK: broadcast assignment, map-side WindowGroupLimit prune, equi-join candidates") {

@@ -257,10 +257,10 @@ class ResumeSpec extends AnyFunSuite {
     }
     val rounds = out.get.roundsRun
     assert(rounds > 2)
-    // f, admitted, deferred, hits, retries, ranked, winnowed, fresh and the
-    // politeness frames: every round checkpoints them and frees them
-    assert(unpersisted.count(_ > firstId) >= 8 * rounds,
-      s"expected >= 8 released checkpoints per round, got ${unpersisted.count(_ > firstId)}")
+    // the politeness split frame, hits, misses, winnowed and fresh: every
+    // round checkpoints them and frees them
+    assert(unpersisted.count(_ > firstId) >= 5 * rounds,
+      s"expected >= 5 released checkpoints per round, got ${unpersisted.count(_ > firstId)}")
     assertReleased(firstId)
     store.clear()
   }
@@ -291,7 +291,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
       .exists(e => String.valueOf(e.getMessage).contains("runner failure")), s"unexpected failure: $err")
     assert(storeB.latestCommitted === Some(1), "round 0 commits, round 1 aborts before its commit")
-    assert(unpersisted.count(_ > firstId) >= 8 * 2, "both rounds' checkpoints are released")
+    assert(unpersisted.count(_ > firstId) >= 5 * 2, "both rounds' checkpoints are released")
     assertReleased(firstId)
 
     val resumed = new CrawlLoop(spark, cfg, pages, robots, good, storeB).run(Seq(Seed))

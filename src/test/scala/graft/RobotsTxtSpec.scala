@@ -260,7 +260,7 @@ class RobotsTxtSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](loop.run(Seq(graft.fixtures.Fixtures.urlOf(0, 0))))
     assert(e.getMessage.contains(s"duplicate rules for host(s): $host —"), e.getMessage)
     assert(!e.getMessage.contains("other.test"), e.getMessage)
-    assert(store.latestCommitted.isEmpty, "the guard runs before round 0 is written")
+    assert(store.latestCommitted.isEmpty, "the guard passes before round 0 commits")
   }
 
   test("robots Sitemap: directives parse globally, dedup, survive comments") {

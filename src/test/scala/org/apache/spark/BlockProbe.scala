@@ -1,13 +1,14 @@
 package org.apache.spark
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** Test-side view of Spark state the public API does not expose: RDD blocks
-  * held by any block manager, the CacheManager, and the listener bus.
+  * held by any block manager, the CacheManager, the listener bus and the
+  * jobs it reports.
   */
 object BlockProbe {
   /** ids of RDDs that still hold at least one block on any block manager */
@@ -32,6 +33,22 @@ object BlockProbe {
       val r = Try(body)
       sc.listenerBus.waitUntilEmpty()
       (r, ids.asScala.toSet)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** run `body`, returning its result and the number of Spark jobs started
+    * while it ran
+    */
+  def jobsDuring[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      sc.listenerBus.waitUntilEmpty()
+      (r, jobs.get())
     } finally sc.removeSparkListener(l)
   }
 }
